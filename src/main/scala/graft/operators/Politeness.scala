@@ -356,11 +356,14 @@ object Politeness {
    * ≤ 2^16 rows each — driver-side size is ≤ n/2^16 rows ≈ 2.4 MB at a
    * 10^10-row wave, and waves are bounded by waveCap anyway); the driver
    * prefix-sums a binding priority's
-   * buckets to the bucket containing the threshold, resolves the exact
-   * value with orderBy+limit+max over that ≤ 2^16-row bucket (compiles to
-   * TakeOrderedAndProject — bounded per-partition heaps), and the final
-   * result is ONE narrow filter over the input: no unions, no window, no
-   * single-task sort. Output identical to the window formulation.
+   * buckets to the bucket containing the threshold. A cut landing on a
+   * bucket boundary (remainder 0) is known from the histogram alone; the
+   * others are resolved together by ONE job: the rows of every such
+   * priority's cut bucket (≤ 2^16 each) are ranked by seq within their
+   * priority, and the row whose rank equals that priority's remainder is
+   * its threshold. The final result is ONE narrow filter over the input:
+   * no unions, no window over the wave, no single-task sort. Output
+   * identical to the window formulation.
    */
   def applyQuotas(eligible: DataFrame, grant: Long, nPriorities: Int): DataFrame = {
     val quotas = priorityQuotas(grant, nPriorities)
@@ -373,28 +376,33 @@ object Politeness {
     val binding = (0 until nPriorities)
       .filter(i => counts.getOrElse(i, 0L) > quotas(i))
     if (binding.isEmpty) return eligible
-    val cutSeq: Map[Int, Long] = binding.map { i =>
+    // per binding priority: (cut bucket, rows of the quota inside it);
+    // a binding priority always has a bucket where the prefix sum passes q
+    val cutBuckets: Map[Int, (Long, Long)] = binding.map { i =>
       val q = quotas(i)
       val bs = hist.filter(_._1 == i).map(t => (t._2, t._3)).sortBy(_._1)
-      var before = 0L
-      var cutB = bs.last._1
-      var found = false
-      bs.foreach { case (b, c) =>
-        if (!found) {
-          if (before + c <= q) before += c
-          else { cutB = b; found = true }
-        }
-      }
-      val rem = (q - before).toInt // ≤ one bucket = ≤ 2^16 rows (seq unique)
-      val cut =
-        if (!found) Long.MaxValue // unreachable for a binding priority
-        else if (rem == 0) (cutB << Shift) - 1
-        else eligible.filter(col("priority") === i &&
-            shiftright(col("seq"), Shift) === cutB)
-          .orderBy(col("seq").asc).limit(rem)
-          .agg(max(col("seq"))).collect()(0).getLong(0)
-      i -> cut
+      val prefix = bs.map(_._2).scanLeft(0L)(_ + _)
+      val k = prefix.indexWhere(_ > q) - 1
+      i -> (bs(k)._1, q - prefix(k)) // remainder ≤ one bucket = ≤ 2^16 rows (seq unique)
     }.toMap
+    val inBucket = cutBuckets.filter(_._2._2 > 0)
+    val resolved: Map[Int, Long] =
+      if (inBucket.isEmpty) Map.empty
+      else {
+        def byPriority(v: ((Long, Long)) => Long): Column =
+          inBucket.foldLeft(lit(null).cast("long")) { case (acc, (i, bq)) =>
+            when(col("priority") === i, lit(v(bq))).otherwise(acc)
+          }
+        val w = Window.partitionBy(col("priority")).orderBy(col("seq").asc)
+        eligible.filter(shiftright(col("seq"), Shift) === byPriority(_._1))
+          .withColumn("__r", row_number().over(w))
+          .filter(col("__r") === byPriority(_._2))
+          .select(col("priority"), col("seq")).collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      }
+    val cutSeq: Map[Int, Long] = cutBuckets.map { case (i, (b, rem)) =>
+      i -> (if (rem == 0) (b << Shift) - 1 else resolved(i))
+    }
     val keep = binding.foldLeft(lit(true)) { (acc, i) =>
       when(col("priority") === i, col("seq") <= cutSeq(i)).otherwise(acc)
     }

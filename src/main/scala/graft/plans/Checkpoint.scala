@@ -18,9 +18,18 @@ import org.apache.spark.sql.types.StructType
  * re-fetching or reordering (the continuation depends only on committed
  * state; kill-resume equivalence is asserted by CrawlJobSpec).
  *
- * Two storage layouts, one commit rule:
- *  - small per-wave outputs (schedule, dead, lineage, metrics, results,
- *    inc) are plain parquet under `<dir>/wave=<k>/<name>`;
+ * Two storage layouts, one commit rule (on-disk layout
+ * [[Checkpoint.Layout]], recorded as the `layout` key of every manifest):
+ *  - small per-wave outputs are plain parquet under `<dir>/wave=<k>/<name>`:
+ *    `schedule`; `fetched` (the wave's successfully fetched pages — the
+ *    one table behind both the O9 inc queue and the extraction results,
+ *    which are projections of it; written when either is on, and the
+ *    manifest's `fetched` key names the views it serves); `dead` (waves
+ *    with errors only); and the opt-in `host_metrics` and `error_inc`
+ *    (bundle mode). The manifest itself carries the wave's A7 metrics
+ *    (`m.*`) and its per-partition lineage counts (`lineage.<stage>`,
+ *    `partition:rows` pairs) — driver-known values that need no parquet
+ *    job;
  *  - the two tables that sit on a join's BIG side every wave — `seen`
  *    and `frontier` — are catalog tables at `<dir>/<name>`,
  *    PARTITIONED BY (wave) and CLUSTERED/SORTED BY (url_hash, url_canon)
@@ -153,8 +162,12 @@ final class Checkpoint(spark: SparkSession, val dir: String, numBuckets: Int = 3
     spark.read.schema(schema).parquet(s"${waveDir(w)}/$name")
 
   /** Union of a per-wave table across committed waves [0, upTo]. */
-  def readAll(upTo: Int, name: String, schema: StructType): DataFrame = {
-    val paths = (0 to upTo).map(w => s"${waveDir(w)}/$name")
+  def readAll(upTo: Int, name: String, schema: StructType): DataFrame =
+    readWaves(0 to upTo, name, schema)
+
+  /** Union of a per-wave table over the given waves (those that wrote it). */
+  def readWaves(waves: Seq[Int], name: String, schema: StructType): DataFrame = {
+    val paths = waves.map(w => s"${waveDir(w)}/$name")
       .filter(p => Files.exists(Paths.get(p)))
     if (paths.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else spark.read.schema(schema).parquet(paths: _*)
@@ -164,6 +177,7 @@ final class Checkpoint(spark: SparkSession, val dir: String, numBuckets: Int = 3
     val props = new Properties()
     state.foreach { case (k, v) => props.setProperty(k, v) }
     props.setProperty("wave", w.toString)
+    props.setProperty("layout", Checkpoint.Layout)
     val tmp = manifestDir.resolve(s".wave-$w.tmp")
     val out = Files.newOutputStream(tmp)
     try props.store(out, null) finally out.close()
@@ -180,17 +194,27 @@ final class Checkpoint(spark: SparkSession, val dir: String, numBuckets: Int = 3
       .toSeq
   }
 
-  def latestWave: Option[Int] = {
-    val waves = committedWaves
-    if (waves.isEmpty) None else Some(waves.max)
-  }
+  /** The latest committed wave; its manifest's layout is checked, so
+   *  resuming or reading a checkpoint of another layout fails here. */
+  def latestWave: Option[Int] = committedWaves.maxOption.map { w => manifest(w); w }
 
+  /** Wave `w`'s manifest; fails when it was written in another layout. */
   def manifest(w: Int): Map[String, String] = {
     val p = manifestDir.resolve(f"wave-$w%05d.properties")
     val props = new Properties()
     val in = Files.newInputStream(p)
     try props.load(in) finally in.close()
-    props.stringPropertyNames().asScala.map(k => k -> props.getProperty(k)).toMap
+    val m = props.stringPropertyNames().asScala.map(k => k -> props.getProperty(k)).toMap
+    m.get("layout") match {
+      case Some(Checkpoint.Layout) => m
+      case found =>
+        throw new IllegalStateException(
+          s"checkpoint $dir: the manifest of wave $w " +
+          found.fold("has no 'layout' key (it was written in the older per-table layout " +
+            "with separate inc/results/lineage tables)")(l => s"has layout '$l'") +
+          s"; this engine reads layout '${Checkpoint.Layout}' only — start the crawl " +
+          "in a new directory")
+    }
   }
 
   /** Drop any uncommitted wave outputs > latest manifest (crash debris):
@@ -213,6 +237,11 @@ final class Checkpoint(spark: SparkSession, val dir: String, numBuckets: Int = 3
 }
 
 object Checkpoint {
+  /** On-disk layout of the per-wave outputs (see the class scaladoc),
+   *  written as the `layout` key of every manifest. Layout 1 (no key)
+   *  kept separate inc, results and lineage tables per wave. */
+  val Layout = "2"
+
   /** DDL for the bucketed big-side store under each table format — the
    *  r5 Iceberg switch, unit-testable without executing (this runtime
    *  has no iceberg jars). Both forms co-locate on (url_hash, …): the

@@ -1,6 +1,10 @@
 package graft.plans
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
@@ -139,6 +143,33 @@ object CrawlJob {
         (r: Runnable) => {
           val t = new Thread(r, "graft-wave-write"); t.setDaemon(true); t
         }))
+
+  /** Row count of every partition, in one job. */
+  private[plans] def partitionCounts(rdd: org.apache.spark.rdd.RDD[_]): Array[Long] =
+    rdd.mapPartitions { it =>
+      var n = 0L; while (it.hasNext) { it.next(); n += 1 }; Iterator.single(n)
+    }.collect()
+
+  /** Lineage stages, in the order their manifest keys are read back. */
+  private[plans] val LineageStages = Seq("candidates", "admitted", "scheduled")
+
+  /** Manifest value of one stage's lineage: `partition:rows` for every
+   *  non-empty partition, comma-separated. */
+  private[plans] def encodeLineage(counts: Array[Long]): String =
+    counts.zipWithIndex.collect { case (n, p) if n > 0 => s"$p:$n" }.mkString(",")
+
+  private[plans] def decodeLineage(v: String): Seq[(Int, Long)] =
+    v.split(',').toSeq.filter(_.nonEmpty).map { e =>
+      val Array(p, n) = e.split(':'); (p.toInt, n.toLong)
+    }
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
+
+  /** Broadcast variables built by a physical plan's broadcast exchanges
+   *  (inside AQE query stages too); exchanges that never ran are skipped. */
+  private[plans] def planBroadcasts(plan: SparkPlan): Seq[Broadcast[_]] =
+    PlanWalk.collect(plan) { case b: BroadcastExchangeExec => b.completionFuture.value }
+      .flatMap(_.flatMap(_.toOption))
 }
 
 class CrawlJob(
@@ -158,6 +189,45 @@ class CrawlJob(
   import spark.implicits._
 
   private val ckpt = new Checkpoint(spark, workDir, settings.numBuckets)
+
+  /** Physical plans the current wave ran: its cache builds and its
+   *  dense-rank passes (see releaseWave). */
+  private val wavePlans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+
+  /** The plan a cached frame's cache is built from. */
+  private def cachePlan(df: DataFrame): Option[SparkPlan] =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder.cachedPlan)
+
+  /** Persists a wave-scoped frame. Its cache plan is kept now: a later
+   *  insert into a state table it reads re-registers the cache under a
+   *  new plan, and the broadcasts the first build made stay with this one. */
+  private def persistWave(df: DataFrame): DataFrame = {
+    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+    wavePlans ++= cachePlan(cached)
+    cached
+  }
+
+  /** Drops a wave's cached frames and destroys the broadcast relations
+   *  the wave's plans built (the fetch join's page table among them).
+   *  Left alone, Spark's ContextCleaner frees a broadcast only once the
+   *  driver's GC has collected its handle, and a handle that reached the
+   *  old generation keeps its whole hash table in the block store until
+   *  a full GC. Destroying them here frees them at the wave boundary,
+   *  whatever the GC does. */
+  private def releaseWave(frames: Seq[DataFrame]): Unit = {
+    val plans = wavePlans.toSeq ++ frames.flatMap(cachePlan)
+    frames.foreach(_.unpersist())
+    plans.flatMap(CrawlJob.planBroadcasts).distinct.foreach(_.destroy())
+    wavePlans.clear()
+  }
+
+  /** Crash-point hook for resume tests: called with (wave, step) right
+   *  after each of a wave's checkpoint writes — "fetched", "seen", "dead",
+   *  "bloom", "frontier" — and with "manifest" just before the commit.
+   *  A hook that throws ends the run there, as a killed driver would. */
+  private[plans] var afterWrite: (Int, String) => Unit = (_, _) => ()
 
   /** P2 rule table; `urlPattern` alone ≙ one catch-all `extract` parser. */
   private val parserRules: Seq[ParserRule] =
@@ -205,18 +275,19 @@ class CrawlJob(
    *  twice per wave). Rows obey the standard valid-until-next() iterator
    *  contract — JoinedRow wraps, downstream operators copy if they buffer.
    *
-   *  Returns (df, total): the per-partition count pass a dense rank needs
-   *  anyway yields the global count for free, so callers never pay a
-   *  separate count job for nScheduled / nNew. */
-  private def withDenseSeq(df: DataFrame, ord: Seq[Column], start: Long, outCol: String): (DataFrame, Long) = {
+   *  Returns (df, per-partition row counts): the count pass a dense rank
+   *  needs anyway yields the global count (their sum) and the wave's
+   *  lineage counts for free, so callers never pay a separate count job
+   *  for nScheduled / nNew. */
+  private def withDenseSeq(df: DataFrame, ord: Seq[Column], start: Long,
+      outCol: String): (DataFrame, Array[Long]) = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
     val sorted = df.orderBy(ord: _*)
     val schema = sorted.schema.add(outCol, LongType, nullable = false)
     val rdd0 = sorted.queryExecution.toRdd
-    val counts = rdd0.mapPartitions { it =>
-      var n = 0L; while (it.hasNext) { it.next(); n += 1 }; Iterator.single(n)
-    }.collect()
+    val counts = CrawlJob.partitionCounts(rdd0)
+    wavePlans += sorted.queryExecution.executedPlan
     val offsets = counts.scanLeft(start)(_ + _)
     val rdd = rdd0.mapPartitionsWithIndex { (p, it) =>
       val joined = new JoinedRow()
@@ -229,7 +300,7 @@ class CrawlJob(
       }
     }
     (org.apache.spark.sql.graftbridge.ColumnBridge.internalCreateDataFrame(spark, rdd, schema),
-      offsets.last - start)
+      counts)
   }
 
   /** Trap admission gate (settings.trapGuard): a pure map-side predicate
@@ -255,11 +326,6 @@ class CrawlJob(
     robotsRules.fold(e)(rules => graft.operators.Robots.filterAllowed(e, rules))
   }
 
-  private def perPartitionLineage(df: DataFrame, wave: Int, stage: String): DataFrame =
-    df.groupBy(spark_partition_id().as("partition_id"))
-      .agg(count(lit(1)).as("rows"))
-      .select(lit(wave).as("wave"), lit(stage).as("stage"), col("partition_id"), col("rows"))
-
   /** Wave 0: admit the seed list (S1; dedup-at-discovery D1/D6 — seeds are
    *  anti-joined like any wave, mq.exist at cola/job/task.py:114-118). */
   private def admitSeeds(seeds: Seq[String]): Unit = {
@@ -279,10 +345,10 @@ class CrawlJob(
     val withSeq = withDenseSeq(deduped, Seq(col("__idx")), waveBase(0), "seq")._1
       .drop("__idx")
       .select(frontierCols: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(persistWave)
     ckpt.writeBucketed(withSeq, 0, "frontier")
     ckpt.writeBucketed(withSeq.select(col("url_hash"), col("url_canon")), 0, "seen")
-    withSeq.unpersist()
+    releaseWave(Seq(withSeq))
     ckpt.commit(0, Map("applied" -> "0", "finished" -> "0", "scheduledTotal" -> "0", "deadTotal" -> "0"))
   }
 
@@ -402,13 +468,15 @@ class CrawlJob(
         settings.nPriorities, settings.salts, inputUpperBound = frontierSize,
         hostBudgets = runBudgets)
         .withColumn("parser_id", ParserDispatch.parserId(col("url"), parserRules))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // the rank pass doubles as the nScheduled count and the cache build
-      val (ranked, nScheduled) = withDenseSeq(
+        .transform(persistWave)
+      // the rank pass doubles as the nScheduled count (and the scheduled
+      // lineage) and the cache build
+      val (ranked, scheduledCounts) = withDenseSeq(
         scheduled.select(col("priority"), col("seq"), col("host"), col("url_canon"), col("depth")),
         Seq(col("priority").asc, col("seq").asc), 0L, "rank")
+      val nScheduled = scheduledCounts.sum
       if (nScheduled == 0) {
-        scheduled.unpersist()
+        releaseWave(Seq(scheduled))
         if (frontier.filter(col("eligible_wave") > w).limit(1).count() == 0) {
           // frontier non-empty but nothing will ever be eligible: done
           frontier.unpersist()
@@ -506,18 +574,25 @@ class CrawlJob(
           .observe(obs, count(lit(1)).as("n"),
             sum(when(col("ok"), 0L).otherwise(1L)).as("errors"),
             sum(when(retriableCol, 1L).otherwise(0L)).as("retries"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .transform(persistWave)
         // materialize: html traversed exactly once, building the cache.
-        // With the inc queue on, the O9 write IS the materializing action
-        // (the wave Observation sits below its `ok` filter, so the write
-        // fires it over every processed row) — one job instead of a
-        // count + a write. An all-error wave then writes an empty inc
-        // file, the same one-job cost the count would have paid.
+        // The fetched-rows write — the one table behind both the O9 inc
+        // queue and the extraction results, which are the same row set —
+        // IS the materializing action (the wave Observation sits below
+        // its `ok` filter, so the write fires it over every processed
+        // row): one job instead of a count + a write per table. An
+        // all-error wave then writes an empty file, the same one-job cost
+        // the count would have paid. The manifest records which views the
+        // table serves this wave (see incTable / resultsTable).
         val success = processed.filter(col("ok"))
-        if (settings.inc)
-          ckpt.write(success.select(col("url"), col("url_canon"),
-            lit(w).as("wave"), col("priority"), col("seq")), w, "inc")
-        else processed.count()
+        val fetchedViews = Seq("inc" -> settings.inc, "results" -> settings.extract)
+          .collect { case (view, true) => view }
+        if (fetchedViews.nonEmpty) {
+          ckpt.write(success.select(col("url"), col("url_canon"), lit(w).as("wave"),
+            col("priority"), col("seq"), col("parser_id"), col("lang"), col("text"),
+            size(col("outs")).as("n_outlinks"), col("__noindex").as("noindex")), w, "fetched")
+          afterWrite(w, "fetched")
+        } else processed.count()
         // pages-unique contract check, free via the wave Observation: the
         // left join returns exactly one row per scheduled url iff `pages`
         // is unique per url — duplicate page rows would silently multiply
@@ -577,15 +652,6 @@ class CrawlJob(
         counters.add("budget", "finishes", nSuccess)
         counters.add("budget", "errors", nErrors)
 
-        if (settings.extract) {
-          // noindex excludes the page from the shipped results only — its
-          // outlinks were already followed above (noindex ≠ nofollow)
-          val results = success.filter(!col("__noindex"))
-            .select(lit(w).as("wave"), col("url_canon"),
-            col("parser_id"), col("lang"), col("text"), size(col("outs")).as("n_outlinks"))
-          ckpt.write(results, w, "results")
-        }
-
         // ---- outlinks (F1) → new candidates: P1/P2 rule filter, P6 resolve
         //      (inside extractOutlinks), P7 self-drop, P8 canonicalize ----
         val outlinks = success.select(
@@ -635,7 +701,7 @@ class CrawlJob(
             freshLabels = Dedup.dedupWave(spark, labels, seen,
                 Seq(col("parent_seq"), col("link_idx")),
                 numBuckets = settings.numBuckets, bloomStore = bloomStore)
-              .persist(StorageLevel.MEMORY_AND_DISK)
+              .transform(persistWave)
             val memberUdf = udf((label: String) => bs.memberUrls(label))
             val members = enrich(freshLabels
                 .select(col("label").as("bundle"), col("parent_seq"), col("link_idx"),
@@ -645,34 +711,43 @@ class CrawlJob(
               .transform(decorate)
               .withColumn("parent_canon", lit(null).cast("string"))
             plain.unionByName(members.select(plain.columns.map(col).toSeq: _*))
-        }).persist(StorageLevel.MEMORY_AND_DISK)
+        }).transform(persistWave)
 
-        // the count is ALSO the cache build, deliberately serialized
+        // the per-partition count (nCandidates and the candidates
+        // lineage) is ALSO the cache build, deliberately serialized
         // before the dedup gate: the gate's union plan scans candidates
         // from two subtrees (in-batch window + force branch), and a
         // lazily-built cache would let their concurrent tasks race and
         // compute the enrich UDFs per partition twice
-        val nCandidates = candidates.count()
+        val candidateCounts = CrawlJob.partitionCounts(
+          candidates.select(lit(1)).queryExecution.toRdd)
+        val nCandidates = candidateCounts.sum
         if (freshLabels != null) nLabels = freshLabels.count() // cached, cheap
 
         // ---- D1 dedup gate ----
         val fresh = Dedup.dedupWave(spark, candidates, seen,
             Seq(col("parent_seq"), col("link_idx"), col("member_idx")),
             numBuckets = settings.numBuckets, bloomStore = bloomStore)
-        // nNew rides the dense-seq count pass; the cache builds at the seen
-        // write (the first action over newEntries)
-        val (freshSeq, nNew) = withDenseSeq(fresh,
+        // nNew (and the admitted lineage) rides the dense-seq count pass;
+        // the cache builds at the seen write (the first action over
+        // newEntries)
+        val (freshSeq, admittedCounts) = withDenseSeq(fresh,
           Seq(col("parent_seq").asc, col("link_idx").asc, col("member_idx").asc),
           waveBase(w), "seq")
+        val nNew = admittedCounts.sum
         val newEntries = freshSeq
           .select(frontierCols: _*)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .transform(persistWave)
 
         // ---- next frontier ----
         // keyed (url_hash, url_canon): the frontier side is a bucketed scan
         // on exactly those keys → no Exchange and no wide-string-only key;
-        // only the wave's scheduled rows (≤ waveCap) shuffle
-        val leftover = frontier.join(scheduled.select("url_hash", "url_canon"),
+        // only the wave's scheduled rows (≤ waveCap) shuffle. The hint
+        // keeps it that way when they are small enough to broadcast: a
+        // broadcast would cost its own job, and its relation would be
+        // built inside the frontier write's plan, out of releaseWave's reach
+        val leftover = frontier.join(
+            scheduled.select("url_hash", "url_canon").hint("shuffle_hash"),
             Seq("url_hash", "url_canon"), "left_anti")
           .select(frontierCols: _*)
         val frontierCandidates = leftover.unionByName(retry).unionByName(newEntries)
@@ -689,56 +764,55 @@ class CrawlJob(
         var deadOut = dead
         var nBlocked = 0L
         val nRetry = obs.get("retries").asInstanceOf[Long] // rode the wave pass
-        var nDead = 0L
-        if (nErrors > 0) {
-          if (settings.bundles.nonEmpty) {
-            val poisoned = exhausted.filter(!ignoreCol && col("bundle").isNotNull)
-              .select(col("bundle")).distinct()
-            val nPoisoned = poisoned.count()
-            if (nPoisoned > 0) {
-              val pdf = if (nPoisoned < 1000000L) broadcast(poisoned) else poisoned
-              val blocked = frontierCandidates.join(pdf, Seq("bundle"), "left_semi")
-              deadOut = dead.unionByName(blocked.select(lit(w).as("wave"),
-                col("url_canon"), col("host"), col("error_times"),
-                lit("bundle_blocked").as("reason"),
-                lit(null).cast("binary").as("content")))
-              // re-project: a using-column join moves `bundle` first, and
-              // the bucketed insert writes by position
-              frontierNext = frontierCandidates.join(pdf, Seq("bundle"), "left_anti")
-                .select(frontierCols: _*)
-            }
-            // O10 in-bundle error_urls (executor.py:500-501): ignore-class
-            // exhausted BUNDLE members persist for the bundle's next pop —
-            // at wave granularity, the O9 inc pass — together with
-            // poisoned-label tombstones (a poisoned bundle's error members
-            // never retry). One small write, error waves in inc+bundle
-            // mode only; both sides ride the cached wave frame.
-            if (settings.inc) {
-              val errRows = exhausted.filter(ignoreCol && col("bundle").isNotNull)
-                .select(col("url"), col("url_canon"), col("bundle"),
-                  lit(w).as("wave"), col("seq"), lit(false).as("poisoned"))
-              val tombstones = poisoned.select(lit(null).cast("string").as("url"),
-                lit(null).cast("string").as("url_canon"), col("bundle"),
-                lit(w).as("wave"), lit(0L).as("seq"), lit(true).as("poisoned"))
-              ckpt.write(errRows.unionByName(tombstones), w, "error_inc")
-            }
-          }
-          // dead letters only get a write job on waves with errors (most
-          // waves have none; empty parquet writes cost a full job each on
-          // the driver-latency-bound wave path)
-          val deadObs = new org.apache.spark.sql.Observation(s"dead_$w")
+        // dead letters only get a write job on waves with errors (most
+        // waves have none; empty parquet writes cost a full job each on
+        // the driver-latency-bound wave path). Their count rides the write.
+        val deadObs = new org.apache.spark.sql.Observation(s"dead_$w")
+        def writeDead(): Unit = {
           ckpt.write(deadOut.observe(deadObs, count(lit(1)).as("n"),
             coalesce(sum(when(col("reason") === "bundle_blocked", 1L).otherwise(0L)),
               lit(0L)).as("blocked")), w, "dead")
-          nDead = deadObs.get("n").asInstanceOf[Long]
+          afterWrite(w, "dead")
+        }
+        if (nErrors > 0 && settings.bundles.nonEmpty) {
+          val poisoned = exhausted.filter(!ignoreCol && col("bundle").isNotNull)
+            .select(col("bundle")).distinct()
+          val nPoisoned = poisoned.count()
+          if (nPoisoned > 0) {
+            val pdf = if (nPoisoned < 1000000L) broadcast(poisoned) else poisoned
+            val blocked = frontierCandidates.join(pdf, Seq("bundle"), "left_semi")
+            deadOut = dead.unionByName(blocked.select(lit(w).as("wave"),
+              col("url_canon"), col("host"), col("error_times"),
+              lit("bundle_blocked").as("reason"),
+              lit(null).cast("binary").as("content")))
+            // re-project: a using-column join moves `bundle` first, and
+            // the bucketed insert writes by position
+            frontierNext = frontierCandidates.join(pdf, Seq("bundle"), "left_anti")
+              .select(frontierCols: _*)
+          }
+          // O10 in-bundle error_urls (executor.py:500-501): ignore-class
+          // exhausted BUNDLE members persist for the bundle's next pop —
+          // at wave granularity, the O9 inc pass — together with
+          // poisoned-label tombstones (a poisoned bundle's error members
+          // never retry). One small write, error waves in inc+bundle
+          // mode only; both sides ride the cached wave frame.
+          if (settings.inc) {
+            val errRows = exhausted.filter(ignoreCol && col("bundle").isNotNull)
+              .select(col("url"), col("url_canon"), col("bundle"),
+                lit(w).as("wave"), col("seq"), lit(false).as("poisoned"))
+            val tombstones = poisoned.select(lit(null).cast("string").as("url"),
+              lit(null).cast("string").as("url_canon"), col("bundle"),
+              lit(w).as("wave"), lit(0L).as("seq"), lit(true).as("poisoned"))
+            ckpt.write(errRows.unionByName(tombstones), w, "error_inc")
+          }
+          // bundle mode writes its dead letters here, on the wave thread:
+          // the blocked count shapes the next frontier size, which the
+          // inc-reseed decision below needs
+          writeDead()
           nBlocked = deadObs.get("blocked").asInstanceOf[Long]
         }
-        deadTotal += nDead
 
         // ---- per-wave outputs + atomic commit (S6) ----
-        val lineage = perPartitionLineage(candidates, w, "candidates")
-          .unionByName(perPartitionLineage(newEntries, w, "admitted"))
-          .unionByName(perPartitionLineage(scheduled, w, "scheduled"))
         // seen delta = new frontier urls ∪ fresh bundle labels (both gate
         // future discoveries; labels must also reach the blooms or the
         // "definitely new" shortcut would readmit a seen label)
@@ -751,7 +825,10 @@ class CrawlJob(
         // that builds the newEntries cache, which every tail write below
         // reads — racing the cache build would recompute the dedup subtree
         // per consumer
-        if (nNew + nLabels > 0) ckpt.writeBucketed(seenDelta, w, "seen")
+        if (nNew + nLabels > 0) {
+          ckpt.writeBucketed(seenDelta, w, "seen")
+          afterWrite(w, "seen")
+        }
 
         // exact arithmetic: scheduled ⊆ frontier and the frontier is unique
         // per url_canon, so the leftover anti-join removes exactly
@@ -780,7 +857,10 @@ class CrawlJob(
         // output jobs from one driver at once; on the local
         // driver-latency-bound path each serialized job costs a scheduler
         // round trip). All are awaited before the manifest commits — the
-        // wave-atomic commit rule is unchanged. The bloom delta folds in
+        // wave-atomic commit rule is unchanged; a failed write still waits
+        // for its siblings, so no write outlives the run that started it.
+        // Outside bundle mode the dead letters are one of them (they read
+        // only the cached wave frame). The bloom delta folds in
         // BEFORE the commit: a crash in between leaves a filter that
         // over-approximates the committed seen set (harmless false
         // "maybe"), never one missing committed urls (BloomStore rule).
@@ -793,10 +873,18 @@ class CrawlJob(
         // BloomStore.mergeAndWrite).
         val fFrontier = scala.concurrent.Future {
           ckpt.writeBucketed(frontierOut, w, "frontier")
+          afterWrite(w, "frontier")
         }(CrawlJob.waveWriteEc)
         val fBloom = scala.concurrent.Future {
-          if (nNew + nLabels > 0) bloomStore.foreach(_.writeDelta(seenDelta, w))
+          if (nNew + nLabels > 0) bloomStore.foreach { st =>
+            st.writeDelta(seenDelta, w)
+            afterWrite(w, "bloom")
+          }
         }(CrawlJob.waveWriteEc)
+        val fDead =
+          if (nErrors > 0 && settings.bundles.isEmpty)
+            Seq(scala.concurrent.Future(writeDead())(CrawlJob.waveWriteEc))
+          else Seq.empty
         // O7 evidence (opt-in): per-(wave, host) fetch outcomes — the
         // banned-window input adaptiveHostBudgets decays budgets from.
         // Reads only the cached `processed` frame; host cardinality bounds
@@ -810,23 +898,28 @@ class CrawlJob(
               w, "host_metrics")
           }(CrawlJob.waveWriteEc))
           else Seq.empty
-        val tailWrites = fHostMetrics ++ Seq(
-          fSchedule,
-          fBloom,
-          fFrontier,
-          scala.concurrent.Future {
-            ckpt.write(lineage, w, "lineage")
-          }(CrawlJob.waveWriteEc))
-        tailWrites.foreach(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
+        val tailWrites = fHostMetrics ++ fDead ++ Seq(fSchedule, fBloom, fFrontier)
+        tailWrites
+          .map(f => scala.util.Try(
+            scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
+          .foreach(_.get)
+        val nDead = if (nErrors > 0) deadObs.get("n").asInstanceOf[Long] else 0L
+        deadTotal += nDead
 
         frontier.unpersist()
         frontier = ckpt.readBucketedWave("frontier", w)
           .persist(StorageLevel.MEMORY_AND_DISK)
         frontierSize = nextSizeBase + nIncSeeded
         val secs = (System.nanoTime() - t0) / 1e9
-        // A7 wave metrics are driver-known scalars — they ride the manifest
-        // (no parquet job); metricsTable reconstructs them from manifests
-        ckpt.commit(w, Map(
+        // A7 wave metrics and the per-partition lineage counts are
+        // driver-known — they ride the manifest (no parquet job);
+        // metricsTable / lineageTable reconstruct them from manifests
+        val lineage = CrawlJob.LineageStages
+          .zip(Seq(candidateCounts, admittedCounts, scheduledCounts))
+          .map { case (stage, counts) => s"lineage.$stage" -> CrawlJob.encodeLineage(counts) }
+        val views = if (fetchedViews.isEmpty) Nil else Seq("fetched" -> fetchedViews.mkString(","))
+        afterWrite(w, "manifest")
+        ckpt.commit(w, (lineage ++ views).toMap ++ Map(
           "applied" -> applied.toString, "finished" -> finished.toString,
           "scheduledTotal" -> scheduledTotal.toString, "deadTotal" -> deadTotal.toString,
           "incPassesUsed" -> (settings.incPasses - incPassesLeft).toString,
@@ -836,9 +929,7 @@ class CrawlJob(
           "m.deduped" -> (nCandidates - nNew).toString,
           "m.frontier_size" -> frontierSize.toString, "m.secs" -> secs.toString))
 
-        scheduled.unpersist(); processed.unpersist()
-        candidates.unpersist(); newEntries.unpersist()
-        if (freshLabels != null) freshLabels.unpersist()
+        releaseWave(Seq(scheduled, processed, candidates, newEntries) ++ Option(freshLabels))
       }
       wave = w
     }
@@ -860,7 +951,9 @@ class CrawlJob(
    *  consecutive-failure counter, executor.py:509-514). */
   private def incReseed(w: Int, seen: DataFrame,
       bloomStore: Option[graft.operators.BloomStore]): (DataFrame, Long) = {
-    val incAll = ckpt.readAll(w, "inc", Schemas.inc)
+    // the current wave's finished rows count too: it is not committed yet,
+    // but its fetched table is written (inc is on whenever a pass runs)
+    val incAll = incRows(fetchedWaves("inc") :+ w)
     val firstFin = incAll.groupBy(col("url_canon"))
       .agg(min(struct(col("wave"), col("priority"), col("seq"), col("url"))).as("f"))
       .select(col("f.url").as("url"), col("url_canon"),
@@ -905,7 +998,7 @@ class CrawlJob(
     val (seeded, n) = withDenseSeq(passed,
       Seq(col("o_src").asc, col("o_wave").asc, col("o_priority").asc, col("o_seq").asc),
       waveBase(w), "seq")
-    (seeded.select(frontierCols: _*), n)
+    (seeded.select(frontierCols: _*), n.sum)
   }
 
   private def summary(wave: Int, applied: Long, finished: Long,
@@ -924,13 +1017,24 @@ class CrawlJob(
   def deadTable: DataFrame =
     ckpt.readAll(ckpt.latestWave.getOrElse(0), "dead", Schemas.dead)
 
-  def lineageTable: DataFrame =
-    ckpt.readAll(ckpt.latestWave.getOrElse(0), "lineage", Schemas.lineage)
+  /** Committed wave manifests after the seed wave, in wave order. */
+  private def waveManifests: Seq[(Int, Map[String, String])] =
+    ckpt.committedWaves.filter(_ > 0).sorted.map(w => w -> ckpt.manifest(w))
+
+  /** Per-partition lineage (candidates, admitted, scheduled) of every
+   *  committed wave, reconstructed from the wave manifests. */
+  def lineageTable: DataFrame = {
+    val rows = for {
+      (w, m) <- waveManifests
+      stage <- CrawlJob.LineageStages
+      (p, n) <- m.get(s"lineage.$stage").toSeq.flatMap(CrawlJob.decodeLineage)
+    } yield LineageRow(w, stage, p, n)
+    rows.toDF()
+  }
 
   /** A7 per-wave metrics, reconstructed from the wave manifests. */
   def metricsTable: DataFrame = {
-    val rows = ckpt.committedWaves.filter(_ > 0).sorted.flatMap { w =>
-      val m = ckpt.manifest(w)
+    val rows = waveManifests.flatMap { case (w, m) =>
       if (!m.contains("m.scheduled")) None
       else Some(WaveMetrics(w, m("m.scheduled").toLong, m("m.fetched").toLong,
         m("m.errors").toLong, m("m.new_urls").toLong, m("m.deduped").toLong,
@@ -940,8 +1044,26 @@ class CrawlJob(
     rows.toDF()
   }
 
+  /** Committed waves whose fetched table serves `view` ("inc" and/or
+   *  "results", as the wave's settings had them — manifest-recorded). */
+  private def fetchedWaves(view: String): Seq[Int] =
+    waveManifests.collect {
+      case (w, m) if m.get("fetched").exists(_.split(',').contains(view)) => w
+    }
+
+  private def incRows(waves: Seq[Int]): DataFrame =
+    ckpt.readWaves(waves, "fetched", Schemas.fetched)
+      .select(col("url"), col("url_canon"), col("wave"), col("priority"), col("seq"))
+
+  /** Extraction results (S4 result sink, [[PageResult]] rows): the
+   *  fetched pages of every wave run with `extract`, minus noindex pages
+   *  (settings.honorDirectives) — their outlinks were followed, but
+   *  noindex excludes a page from the shipped results. */
   def resultsTable: DataFrame =
-    ckpt.readAll(ckpt.latestWave.getOrElse(0), "results", Schemas.results)
+    ckpt.readWaves(fetchedWaves("results"), "fetched", Schemas.fetched)
+      .filter(!col("noindex"))
+      .select(col("wave"), col("url_canon"), col("parser_id"), col("lang"), col("text"),
+        col("n_outlinks"))
 
   /** O7 per-(wave, host) fetch outcomes across committed waves (written
    *  when settings.hostMetrics): feed through
@@ -953,8 +1075,7 @@ class CrawlJob(
   /** O9 incremental re-crawl queue: re-enqueue as the lowest priority
    *  (task.py:135-139) — v1 ships the table; continuous re-crawl is a
    *  rerun seeded from it. */
-  def incTable: DataFrame =
-    ckpt.readAll(ckpt.latestWave.getOrElse(0), "inc", Schemas.inc)
+  def incTable: DataFrame = incRows(fetchedWaves("inc"))
 
   /** O10 in-bundle error_urls state: ignore-exhausted bundle members +
    *  poisoned-label tombstones (see ErrorIncEntry). */

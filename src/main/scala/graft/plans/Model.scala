@@ -39,7 +39,8 @@ case class DeadLetter(wave: Int, url_canon: String, host: String,
     error_times: Int, reason: String, content: Array[Byte])
 
 /** Per-partition lineage row (north rule: resumable with per-partition
- *  lineage); stage ∈ {candidates, admitted, scheduled}. */
+ *  lineage); stage ∈ {candidates, admitted, scheduled}. Read back from
+ *  the wave manifests, which carry the counts. */
 case class LineageRow(wave: Int, stage: String, partition_id: Int, rows: Long)
 
 /** Per-(wave, host) fetch outcome counts (O7 input: the banned-window
@@ -52,8 +53,8 @@ case class WaveMetrics(wave: Int, scheduled: Long, fetched: Long, errors: Long,
     new_urls: Long, deduped: Long, frontier_size: Long,
     applied: Long, finished: Long, secs: Double)
 
-/** Extraction result row (S4 result sink); parser_id = the P2 rule that
- *  handled the page. */
+/** Extraction result row (S4 result sink, a projection of the wave's
+ *  fetched table); parser_id = the P2 rule that handled the page. */
 case class PageResult(wave: Int, url_canon: String, parser_id: String,
     lang: String, text: String, n_outlinks: Int)
 
@@ -63,6 +64,13 @@ case class PageResult(wave: Int, url_canon: String, parser_id: String,
  *  (wave, priority, seq) is the finish order — the inc store's FIFO
  *  (within a wave, units finish in schedule order = (priority, seq)). */
 case class IncEntry(url: String, url_canon: String, wave: Int, priority: Int, seq: Long)
+
+/** One successfully fetched page of a wave — the single per-wave table
+ *  the [[IncEntry]] queue and the [[PageResult]] results are both read
+ *  from (they are the same row set). `noindex` pages are kept here (they
+ *  are finished units) and filtered out of the results view. */
+case class FetchedPage(url: String, url_canon: String, wave: Int, priority: Int, seq: Long,
+    parser_id: String, lang: String, text: String, n_outlinks: Int, noindex: Boolean)
 
 /** O10 in-bundle `error_urls` row (cola/job/executor.py:500-501: an
  *  ignore-class exhaustion appends the url to `bundle.error_urls`; every
@@ -82,10 +90,8 @@ object Schemas {
   val seen: StructType = Encoders.product[SeenEntry].schema
   val schedule: StructType = Encoders.product[ScheduleEntry].schema
   val dead: StructType = Encoders.product[DeadLetter].schema
-  val lineage: StructType = Encoders.product[LineageRow].schema
   val metrics: StructType = Encoders.product[WaveMetrics].schema
   val hostMetrics: StructType = Encoders.product[HostWaveMetrics].schema
-  val results: StructType = Encoders.product[PageResult].schema
-  val inc: StructType = Encoders.product[IncEntry].schema
+  val fetched: StructType = Encoders.product[FetchedPage].schema
   val errorInc: StructType = Encoders.product[ErrorIncEntry].schema
 }

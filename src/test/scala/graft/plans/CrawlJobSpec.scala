@@ -1,6 +1,7 @@
 package graft.plans
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -69,9 +70,43 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     job.deadTable.select("url_canon", "reason")
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
 
+  private def seenSet(job: CrawlJob): Set[String] =
+    job.seenTable.select("url_canon").collect().map(_.getString(0)).toSet
+
+  /** Σ rows per (wave, stage) of the per-partition lineage. */
+  private def lineageSums(job: CrawlJob): Map[(Int, String), Long] =
+    job.lineageTable.groupBy("wave", "stage").agg(sum("rows"))
+      .collect().map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
+
+  /** Per committed wave: Σ candidates = new_urls + deduped, Σ admitted =
+    * new_urls, Σ scheduled = the wave's schedule rows. */
+  private def assertLineageMatchesWaves(job: CrawlJob): Unit = {
+    val sums = lineageSums(job)
+    val metrics = job.metricsTable.select("wave", "new_urls", "deduped").collect()
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val scheduled = job.scheduleTable.groupBy("wave").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(metrics.nonEmpty && sums.nonEmpty)
+    assert(sums.keySet.map(_._1).subsetOf(metrics.keySet), "lineage for an uncommitted wave")
+    metrics.foreach { case (w, (nNew, nDeduped)) =>
+      assert(sums.getOrElse((w, "candidates"), 0L) == nNew + nDeduped, s"wave $w candidates")
+      assert(sums.getOrElse((w, "admitted"), 0L) == nNew, s"wave $w admitted")
+      assert(sums.getOrElse((w, "scheduled"), 0L) == scheduled.getOrElse(w, 0L),
+        s"wave $w scheduled")
+    }
+  }
+
   // ---- shared runs ----
   private lazy val fullRun: (CrawlJob, CrawlSummary) = runEngine(base, tmpDir("full"))
   private lazy val fullSim: ColaSimulator = runSim(base)
+  private val extractSettings = base.copy(extract = true, size = 20, waveCap = 20)
+  private lazy val extractRun: (CrawlJob, CrawlSummary) = runEngine(extractSettings, tmpDir("ex"))
+  // stopped after wave 2, then resumed on the same checkpoint
+  private lazy val resumedRun: CrawlJob = {
+    val dir = tmpDir("partial")
+    runEngine(base.copy(maxWaves = 2), dir)
+    runEngine(base, dir)._1
+  }
 
   test("crawl ordering matches the reference simulator (priorities=1, the reference's own e2e config)") {
     assert(scheduleTuples(fullRun._1) == simTuples(fullSim), "schedule order diverged")
@@ -122,6 +157,23 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("rows") =!= col("count")).count()
     assert(mismatch == 0)
     assert(lineage.count() > 0)
+    // every stage of every wave, before and after a resume
+    assertLineageMatchesWaves(fullRun._1)
+    assertLineageMatchesWaves(resumedRun)
+    assert(lineageSums(resumedRun) == lineageSums(fullRun._1))
+  }
+
+  test("planBroadcasts: the relations a plan broadcast once it ran, with and without AQE") {
+    val oldAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try Seq("false", "true").foreach { aqe =>
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      val small = spark.range(0, 10).selectExpr("cast(id as string) as k")
+      val joined = spark.range(0, 1000).selectExpr("cast(id % 20 as string) as k", "id")
+        .join(broadcast(small), "k")
+      assert(CrawlJob.planBroadcasts(joined.queryExecution.executedPlan).isEmpty, s"aqe=$aqe")
+      assert(joined.collect().length == 500)
+      assert(CrawlJob.planBroadcasts(joined.queryExecution.executedPlan).size == 1, s"aqe=$aqe")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", oldAqe)
   }
 
   test("adaptive skew politeness equals the plain per-host window (J5)") {
@@ -756,18 +808,76 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("resume from checkpoint: killed run continues without re-fetch or reorder") {
-    val partial = tmpDir("partial")
-    runEngine(base.copy(maxWaves = 2), partial)
-    // simulate a crash mid-wave-3: an uncommitted wave dir must be ignored,
-    // and so must uncommitted wave partitions inside the bucketed state
-    // tables (seen/frontier) — including one with a stray data file
-    Files.createDirectories(Paths.get(partial, "wave=3", "schedule"))
-    Files.createDirectories(Paths.get(partial, "seen", "wave=3"))
-    Files.write(Paths.get(partial, "seen", "wave=3", "part-junk.parquet"), Array[Byte](1, 2, 3))
-    Files.createDirectories(Paths.get(partial, "frontier", "wave=3"))
-    val (resumed, _) = runEngine(base, partial)
-    assert(scheduleTuples(resumed) == scheduleTuples(fullRun._1), "resume reordered the crawl")
-    assert(resumed.seenTable.count() == fullRun._1.seenTable.count())
+    assert(scheduleTuples(resumedRun) == scheduleTuples(fullRun._1), "resume reordered the crawl")
+    assert(resumedRun.seenTable.count() == fullRun._1.seenTable.count())
+    // crash points inside a wave commit: the run dies right after one of
+    // the wave's writes (or just before its manifest), leaving that
+    // wave's partial outputs on disk; the resumed run must drop them and
+    // end exactly where the uninterrupted run and the simulator do. The
+    // bloom filter is on so its delta write is one of the points.
+    val settings = base.copy(useBloom = true, bloomCapacity = 4096)
+    val (whole, wholeSummary) = runEngine(settings, tmpDir("whole"))
+    val simScheduled = fullSim.schedule.groupBy(_.wave).map { case (w, s) => w -> s.size.toLong }
+    assert(scheduleTuples(whole) == simTuples(fullSim))
+    final class Crash(point: String) extends RuntimeException(point)
+    Seq("fetched", "seen", "dead", "bloom", "frontier", "manifest").foreach { point =>
+      val dir = tmpDir(s"crash-$point")
+      val crashing = new CrawlJob(spark, pagesDF, settings, dir)
+      crashing.afterWrite = (w, step) => if (w >= 2 && step == point) throw new Crash(point)
+      intercept[Crash](crashing.run(Fixtures.seeds(V)))
+      val (resumed, summary) = runEngine(settings, dir)
+      assert(scheduleTuples(resumed) == scheduleTuples(whole), s"$point: schedule diverged")
+      assert(scheduleTuples(resumed) == simTuples(fullSim), s"$point: schedule ≠ simulator")
+      assert(seenSet(resumed) == seenSet(whole) && seenSet(resumed) == fullSim.seen.toSet,
+        s"$point: seen set diverged")
+      assert(deadPairs(resumed) == deadPairs(whole) && deadPairs(resumed) == fullSim.dead.toSet,
+        s"$point: dead letters diverged")
+      assert(summary == wholeSummary, s"$point: budget accounting diverged")
+      assert(lineageSums(resumed) == lineageSums(whole), s"$point: lineage diverged")
+      assert(lineageSums(resumed).collect { case ((w, "scheduled"), n) => w -> n } == simScheduled,
+        s"$point: scheduled lineage ≠ simulator")
+      assertLineageMatchesWaves(resumed)
+    }
+  }
+
+  test("a checkpoint without a layout key is refused with a clear message") {
+    val dir = tmpDir("oldlayout")
+    runEngine(base.copy(maxWaves = 1), dir)
+    // rewrite the committed manifests as the older per-table layout left them
+    val manifests = Paths.get(dir, "manifest")
+    val files = Files.list(manifests)
+    try files.iterator().asScala.foreach { p =>
+      Files.write(p, Files.readAllLines(p).asScala.filterNot(_.startsWith("layout=")).asJava)
+    } finally files.close()
+    val job = new CrawlJob(spark, pagesDF, base, dir)
+    val onResume = intercept[IllegalStateException](job.run(Fixtures.seeds(V)))
+    assert(onResume.getMessage.contains("no 'layout' key"), onResume.getMessage)
+    val onRead = intercept[IllegalStateException](job.scheduleTable)
+    assert(onRead.getMessage.contains("no 'layout' key"), onRead.getMessage)
+  }
+
+  test("table readers: inc and results views follow the settings of the waves that wrote them") {
+    val (both, summary) = extractRun
+    val settings = extractSettings
+    assert(both.incTable.count() == summary.finished)
+    assert(both.resultsTable.count() == summary.finished)
+    assert(both.incTable.columns.toSeq == Seq("url", "url_canon", "wave", "priority", "seq"))
+    assert(both.resultsTable.columns.toSeq ==
+      Seq("wave", "url_canon", "parser_id", "lang", "text", "n_outlinks"))
+    val (noInc, _) = runEngine(settings.copy(inc = false), tmpDir("views-noinc"))
+    assert(noInc.incTable.count() == 0 && noInc.resultsTable.count() == summary.finished)
+    val (noExtract, _) = runEngine(settings.copy(extract = false), tmpDir("views-noextract"))
+    assert(noExtract.resultsTable.count() == 0 && noExtract.incTable.count() == summary.finished)
+    // one checkpoint, waves run with different settings (wave 1 with
+    // neither view, then both): each wave's views follow its own settings
+    val dir = tmpDir("views-mixed")
+    runEngine(settings.copy(size = 40, inc = false, extract = false, maxWaves = 1), dir)
+    val (mixed, _) = runEngine(settings.copy(size = 40), dir)
+    val fetchedLater = mixed.metricsTable.filter(col("wave") > 1)
+      .agg(sum("fetched")).head().getLong(0)
+    assert(fetchedLater > 0 && mixed.scheduleTable.filter(col("wave") === 1).count() > 0)
+    assert(mixed.incTable.count() == fetchedLater && mixed.resultsTable.count() == fetchedLater)
+    assert(mixed.resultsTable.filter(col("wave") === 1).count() == 0)
   }
 
   test("crawl order is independent of shuffle partitioning and bucket count") {
@@ -956,8 +1066,7 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("pipeline extraction matches the pages golden text (input_hint invariant)") {
-    val settings = base.copy(extract = true, size = 20, waveCap = 20)
-    val (job, _) = runEngine(settings, tmpDir("ex"))
+    val (job, _) = extractRun
     val joined = job.resultsTable.alias("r")
       .join(pagesDF.alias("p"), col("r.url_canon") === col("p.url"))
       .select((col("r.text") === col("p.text")).as("ok"))
