@@ -76,14 +76,6 @@ object FrontierBench {
   def deleteRecursively(p: java.nio.file.Path): Unit =
     graft.plans.Checkpoint.deleteRecursively(p)
 
-  /** Bench bloom state over the seen set (built with the state, not in the
-   *  timed wave — a crawl maintains it incrementally per D2/D3). Kept for
-   *  the diagnostic in-memory comparison; the shipped path is the store. */
-  def seenBloomState(seen: DataFrame, n: Long, numBuckets: Int = BloomBuckets): Map[Int, Array[Byte]] =
-    Dedup.seenBlooms(seen, numBuckets, math.max(n / 5 / numBuckets, 1024))
-
-  val BloomBuckets = 64
-
   /** The SHIPPED bloom state: partition-local per-bucket filter files
    *  beside the seen table (never driver-collected/broadcast), aligned to
    *  the storage-bucket layout so the timed wave's probe rides the same
@@ -98,15 +90,14 @@ object FrontierBench {
   /** One measured wave; returns (scheduled, seconds). */
   def runWave(spark: SparkSession, n: Long, seen: DataFrame,
       hostBudget: Int = 1000, salts: Int = 32, nPriorities: Int = 3,
-      blooms: Option[Map[Int, Array[Byte]]] = None,
       bloomStore: Option[graft.operators.BloomStore] = None): (Long, Double) = {
     val t0 = System.nanoTime()
     val cands = candidates(spark, n)
     // bloomAligned: the in-batch dedup aggregate keys exactly
     // (url_hash, url_canon) with shuffle.partitions == StorageBuckets, so
     // its output already sits on the store's bucket layout
-    val deduped = Dedup.dedupWave(spark, cands, seen, Seq(col("seq")), blooms,
-      BloomBuckets, bloomStore = bloomStore, bloomAligned = true)
+    val deduped = Dedup.dedupWave(spark, cands, seen, Seq(col("seq")),
+      bloomStore = bloomStore, bloomAligned = true)
     // Materialize the dedup output once per wave (timed — a real crawl does
     // the same between its dedup and schedule stages): the politeness step
     // reads it three ways (per-host counts, cold pass, hot top-k) plus the
@@ -183,19 +174,15 @@ object FrontierBench {
           s.count(); s
         } else seenStateTable(spark, n, dir.toString)
       // bloom pre-filter state: maintained with the seen set (D2/D3), so
-      // built in state prep, not in the timed wave. SPARK_GRAFT_BLOOM=mem
-      // switches to the r2-style driver-broadcast map (diagnostic only).
-      val (blooms, store) =
-        if (sys.env.get("SPARK_GRAFT_BLOOM").contains("mem"))
-          (Some(seenBloomState(seen, n)), None)
-        else (None, Some(seenBloomStore(spark, n, dir.toString)))
+      // built in state prep, not in the timed wave
+      val store = Some(seenBloomStore(spark, n, dir.toString))
       // full-size untimed warmups: JIT, codegen, GC sizing
-      (1 to warmups).foreach(_ => runWave(spark, n, seen, blooms = blooms, bloomStore = store))
+      (1 to warmups).foreach(_ => runWave(spark, n, seen, bloomStore = store))
       val times = (1 to reps).map { r =>
         // let the ContextCleaner drop previous reps' shuffle files (tmpfs
         // pressure otherwise bleeds into the next measurement)
         System.gc(); Thread.sleep(1500)
-        val t = runWave(spark, n, seen, blooms = blooms, bloomStore = store)._2
+        val t = runWave(spark, n, seen, bloomStore = store)._2
         // stream each rep immediately: if the parent kills this child on
         // its budget cap, completed reps are salvaged from the output
         // file instead of the whole pair losing its sample (the r3-tail
@@ -206,56 +193,6 @@ object FrontierBench {
       spark.stop()
       println(f"GRAFT_WAVE_SECS ${times.min}%.4f all=${times.map(t => f"$t%.2f").mkString(",")}")
     } finally deleteRecursively(dir)
-  }
-
-  /** Stage-by-stage breakdown in a clean JVM (diagnostics). */
-  private def profileMain(cores: Int, n: Long): Unit = {
-    val spark = session(cores)
-    spark.sparkContext.setLogLevel("ERROR")
-    runWave(spark, math.max(n / 10, 10000), seenState(spark, math.max(n / 10, 10000))) // warmup
-    def time(tag: String)(f: => Long): Unit = {
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); val c = f
-        ((System.nanoTime() - t0) / 1e9, c)
-      }
-      println(f"GRAFT_STAGE $cores $tag%-18s ${runs.map(_._1).min}%7.2f rows=${runs.head._2} all=${runs.map(r => f"${r._1}%.2f").mkString(",")}")
-    }
-    time("enrich_force") {
-      // force UDF evaluation of every column via a cheap aggregate
-      candidates(spark, n).select(sum(length(col("url_canon"))),
-        sum(pmod(col("url_hash"), lit(1000000L)))).collect(); n
-    }
-    val cands = candidates(spark, n).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cands.count()
-    spark.conf.set("spark.sql.shuffle.partitions", StorageBuckets.toString)
-    val profileDir = scratchDir("graft-profile-seen")
-    val seen = seenStateTable(spark, n, profileDir.toString)
-    val blooms = seenBloomState(seen, n)
-    time("firstSeen") { Dedup.firstSeenInBatch(cands, Seq(col("seq"))).count() }
-    val fs = Dedup.firstSeenInBatch(cands, Seq(col("seq")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fs.count()
-    time("antiJoin") { Dedup.antiJoinSeen(fs, seen).count() }
-    time("antiJoinBloom") {
-      Dedup.antiJoinSeenWithBloom(spark, fs, seen, blooms, BloomBuckets).count()
-    }
-    val store = seenBloomStore(spark, n, profileDir.toString)
-    time("antiJoinBloomStore") {
-      Dedup.antiJoinSeenWithBloomStore(fs, seen, store, alignedInput = true).count()
-    }
-    val dd = Dedup.antiJoinSeen(fs, seen)
-      .withColumn("host", UrlExprs.urlHost(col("url_canon")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    dd.count()
-    time("hostEligSalted") { Politeness.hostEligibleSalted(dd, 1000, 32).count() }
-    time("hostEligAdaptive") { Politeness.hostEligibleAdaptive(dd, 1000, 32).count() }
-    time("applyQuotas") {
-      Politeness.applyQuotas(
-        dd.withColumn("priority", Politeness.clampPriority(col("priority"), 3)), n, 3).count()
-    }
-    time("scheduleFull") { Politeness.schedule(dd, 1000, n, 3, 32).count() }
-    spark.stop()
-    deleteRecursively(profileDir)
   }
 
   /** Delete scratch a force-killed child left behind on tmpfs: its
@@ -438,10 +375,6 @@ object FrontierBench {
     if (args.length >= 4 && args(0) == "--wave") {
       childMain(args(1).toInt, args(2).toLong, args(3).toInt,
         if (args.length >= 5) args(4).toInt else 2)
-      return
-    }
-    if (args.length >= 3 && args(0) == "--profile") {
-      profileMain(args(1).toInt, args(2).toLong)
       return
     }
     if (args.length >= 4 && args(0) == "--pair") {

@@ -53,7 +53,7 @@ object ProfileCrawl {
       val dir = FrontierBench.scratchDir("graft-prof-crawl").toString
       val settings = CrawlSettings(size = 40, nPriorities = 1, hostBudget = 6,
         waveCap = 40, retries = 1, maxWaves = 8, urlPattern = Fixtures.UrlPattern,
-        extract = false, useBloom = true, bloomCapacity = 4096, numBuckets = 8)
+        extract = false, bloomCapacity = 4096, numBuckets = 8)
       val t0 = System.nanoTime()
       val job = new CrawlJob(spark, pages, settings, dir)
       job.run(Fixtures.seeds(v))

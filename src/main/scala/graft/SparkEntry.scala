@@ -120,7 +120,7 @@ object SparkEntry {
     val dir = java.nio.file.Files.createTempDirectory("graft-entry").toString
     val settings = CrawlSettings(size = 60, nPriorities = 1, hostBudget = 4,
       waveCap = 60, retries = 1, maxWaves = 20, urlPattern = Fixtures.UrlPattern,
-      extract = true, useBloom = true, bloomCapacity = 4096, numBuckets = 8)
+      extract = true, bloomCapacity = 4096, numBuckets = 8)
     val job = new CrawlJob(spark, pages, settings, dir)
     job.run(Fixtures.seeds(v))
     job.scheduleTable
@@ -187,15 +187,16 @@ object SparkEntry {
       Politeness.hostEligible(enriched(s, d), 3)
         .select(col("host"), col("priority"), col("seq"), col("url_canon"))),
 
-    // O6 at scale: salted two-phase top-k (same result — its own oracle)
+    // O6 at scale: salted two-phase top-k over every host (maxHotHosts = 0
+    // trips the skew guard) — same result, its own oracle
     "politeness_topk_salted" -> ((s, d) =>
-      Politeness.hostEligibleSalted(enriched(s, d), 3, 4)
+      Politeness.hostEligible(enriched(s, d), 3, salts = 4, maxHotHosts = 0)
         .select(col("host"), col("priority"), col("seq"), col("url_canon"))),
 
     // O6/J5 frontier-scale path: adaptive skew split (cold hosts pass
     // narrow, only hot hosts ranked) — must equal the plain window
     "politeness_topk_adaptive" -> ((s, d) =>
-      Politeness.hostEligibleAdaptive(enriched(s, d), 3, 4)
+      Politeness.hostEligible(enriched(s, d), 3, salts = 4)
         .select(col("host"), col("priority"), col("seq"), col("url_canon"))),
 
     // O7 adaptive throttling: per-host budget decay from banned windows
@@ -344,9 +345,8 @@ object SparkEntry {
         "host4.example.com" -> "User-agent: googlebot\nCrawl-delay: 1",
         "host5.example.com" -> "User-agent: *\nCrawl-delay: 0.5",
         "host6.example.com" -> "User-agent: *\nCrawl-delay: 90"))
-      Politeness.hostEligibleCapped(enriched(s, d),
-          Robots.capsFromDelays(delays, windowSecs = 60.0, maxK = 8),
-          defaultK = 3, maxK = 8)
+      Politeness.hostEligible(enriched(s, d), 3,
+          Some(Robots.capsFromDelays(delays, windowSecs = 60.0, maxK = 8)))
         .select(col("host"), col("priority"), col("seq"), col("url_canon"))
     }),
 
@@ -1179,7 +1179,7 @@ object SparkEntry {
       val dir = FrontierBench.scratchDir("graft-q-crawl").toString
       val settings = CrawlSettings(size = 40, nPriorities = 1, hostBudget = 6,
         waveCap = 40, retries = 1, maxWaves = 8, urlPattern = Fixtures.UrlPattern,
-        extract = false, useBloom = true, bloomCapacity = 4096, numBuckets = 8)
+        extract = false, bloomCapacity = 4096, numBuckets = 8)
       val job = new CrawlJob(s, pages, settings, dir)
       job.run(Fixtures.seeds(v))
       job.scheduleTable

@@ -94,9 +94,6 @@ object BloomFilter {
     new BloomFilter(m, k, words)
   }
 
-  def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    fromBytes(a).merge(fromBytes(b)).toBytes
-
   /** Typed Aggregator building a per-group Bloom from 64-bit url hashes;
    *  registered per-bucket so each seen-set partition carries its own
    *  compact filter (D3: capacity is per-bucket = jobCapacity/P). */
@@ -113,9 +110,4 @@ object BloomFilter {
   /** Column building a bloom over a LongType hash column. */
   def bloomAggCol(hashCol: Column, capacity: Long, fpr: Double = 0.01): Column =
     functions.udaf(new BloomAgg(capacity, fpr)).apply(hashCol)
-
-  /** Deterministic probe UDF: bloomBytes × hash → mightContain. */
-  val mightContainUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    functions.udf((bytes: Array[Byte], h: Long) =>
-      if (bytes == null) false else fromBytes(bytes).mightContain(h))
 }

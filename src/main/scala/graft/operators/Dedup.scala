@@ -23,12 +23,7 @@ import org.apache.spark.sql.functions._
  */
 object Dedup {
 
-  val SeenBucketCol = "bucket"
-
   def urlHash(c: Column): Column = xxhash64(c)
-
-  def bucketOf(hashCol: Column, numBuckets: Int): Column =
-    pmod(hashCol, lit(numBuckets.toLong)).cast("int")
 
   /** Keep the first row per url_canon within a batch, "first" = min of
    *  `ord` (F4/D1 in-batch dedup, order-preserving like
@@ -98,36 +93,6 @@ object Dedup {
       Seq("url_hash", "url_canon"), "left_anti")
 
   /**
-   * Dedup with per-bucket Bloom pre-filter. `blooms` maps bucket →
-   * serialized BloomFilter over the seen url_hashes of that bucket
-   * (see [[seenBlooms]] / [[updateBlooms]]). Candidates the bloom has
-   * never seen skip the anti-join entirely; possible hits go through the
-   * exact join, so output is identical to [[antiJoinSeen]].
-   */
-  def antiJoinSeenWithBloom(
-      spark: SparkSession,
-      candidates: DataFrame,
-      seen: DataFrame,
-      blooms: Map[Int, Array[Byte]],
-      numBuckets: Int): DataFrame = {
-    if (blooms.isEmpty) return antiJoinSeen(candidates, seen)
-    val bc = spark.sparkContext.broadcast(blooms.map { case (k, v) => k -> BloomFilter.fromBytes(v) })
-    // The probe is pure, but it is deliberately marked nondeterministic so
-    // Catalyst cannot push the maybe/!maybe split below whatever produced
-    // `candidates`: pushed-down, the two branch filters land under the
-    // in-batch dedup aggregate and duplicate its entire subtree (scan +
-    // canonicalize UDFs + partial agg run twice); kept above, the branches
-    // share one identical Exchange and ReuseExchange computes it once.
-    val maybeSeen = udf((bucket: Int, h: Long) =>
-      bc.value.get(bucket).exists(_.mightContain(h))).asNondeterministic()
-    val withBucket = candidates.withColumn("__b", bucketOf(col("url_hash"), numBuckets))
-    val flagged = withBucket.withColumn("__maybe", maybeSeen(col("__b"), col("url_hash")))
-    val definitelyNew = flagged.filter(!col("__maybe")).drop("__b", "__maybe")
-    val needExact = flagged.filter(col("__maybe")).drop("__b", "__maybe")
-    definitelyNew.unionByName(antiJoinSeen(needExact, seen))
-  }
-
-  /**
    * Dedup with the PARTITION-LOCAL persistent bloom state ([[BloomStore]])
    * — the 100 TB path: no bloom bytes on the driver, no per-executor
    * full-state broadcast. The candidate delta is repartitioned to the
@@ -164,44 +129,16 @@ object Dedup {
     definitelyNew.unionByName(antiJoinSeen(needExact, seen))
   }
 
-  /** Build per-bucket blooms from a seen table (url_hash column).
-   *  bucketCapacity = total expected keys / numBuckets (D3). */
-  def seenBlooms(seen: DataFrame, numBuckets: Int, bucketCapacity: Long,
-      fpr: Double = 0.01): Map[Int, Array[Byte]] = {
-    seen.groupBy(bucketOf(col("url_hash"), numBuckets).as("bucket"))
-      .agg(BloomFilter.bloomAggCol(col("url_hash"), bucketCapacity, fpr).as("bloom"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getAs[Array[Byte]](1))
-      .toMap
-  }
-
-  /** Incremental bloom maintenance: fold a wave's new urls into the
-   *  existing per-bucket blooms (cheap — scans only the delta). */
-  def updateBlooms(existing: Map[Int, Array[Byte]], newUrls: DataFrame,
-      numBuckets: Int, bucketCapacity: Long, fpr: Double = 0.01): Map[Int, Array[Byte]] = {
-    val delta = seenBlooms(newUrls, numBuckets, bucketCapacity, fpr)
-    (existing.keySet ++ delta.keySet).map { b =>
-      (existing.get(b), delta.get(b)) match {
-        case (Some(a), Some(d)) => b -> BloomFilter.mergeBytes(a, d)
-        case (Some(a), None)    => b -> a
-        case (None, Some(d))    => b -> d
-        case (None, None)       => throw new IllegalStateException("unreachable")
-      }
-    }.toMap
-  }
-
   /** D1 full gate for one wave: split force/non-force, in-batch first-seen,
-   *  anti-join, re-union force rows (which always pass). The bloom
-   *  pre-filter comes either from a [[BloomStore]] (the shipped
-   *  partition-local path) or a driver-side bucket map (kept for
-   *  diagnostics/equivalence specs); both are output-identical to no
-   *  bloom at all. */
+   *  anti-join, re-union force rows (which always pass). The optional
+   *  [[BloomStore]] pre-filter is output-identical to no filter at all.
+   *  `spark` and `numBuckets` are unused (the store carries its own
+   *  bucket count); they stay so that existing callers keep compiling. */
   def dedupWave(
       spark: SparkSession,
       candidates: DataFrame,
       seen: DataFrame,
       ord: Seq[Column],
-      blooms: Option[Map[Int, Array[Byte]]] = None,
       numBuckets: Int = 32,
       bloomStore: Option[BloomStore] = None,
       bloomAligned: Boolean = false): DataFrame = {
@@ -209,11 +146,8 @@ object Dedup {
     val nonForce = if (hasForce) candidates.filter(!col("force")) else candidates
     val forced = if (hasForce) candidates.filter(col("force")) else candidates.limit(0)
     val inBatch = firstSeenInBatch(nonForce, ord)
-    val fresh = (bloomStore, blooms) match {
-      case (Some(st), _)   => antiJoinSeenWithBloomStore(inBatch, seen, st, bloomAligned)
-      case (None, Some(b)) => antiJoinSeenWithBloom(spark, inBatch, seen, b, numBuckets)
-      case _               => antiJoinSeen(inBatch, seen)
-    }
+    val fresh = bloomStore.fold(antiJoinSeen(inBatch, seen))(
+      antiJoinSeenWithBloomStore(inBatch, seen, _, bloomAligned))
     fresh.unionByName(forced)
   }
 

@@ -102,7 +102,7 @@ object LinkGraph {
   }
 
   /** `materialize = false` skips the per-round localCheckpoint so probes
-   *  can inspect the composed update plan (R4PlanProbe / BENCH/PLANS.md).
+   *  can inspect the composed update plan (BENCH/PLANS.md §14).
    *  Production callers MUST materialize: the self-referential loop
    *  otherwise doubles the logical plan per iteration. */
   private[graft] def pageRankImpl(edges: DataFrame, srcCol: String, dstCol: String,

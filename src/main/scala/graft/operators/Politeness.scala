@@ -11,9 +11,16 @@ import org.apache.spark.sql.functions._
  * Deterministic contract (mirrored exactly by the in-repo reference
  * simulator, ColaSimulator):
  *  1. host-eligible: rank candidates within each host by (priority, seq)
- *     ascending; keep rank <= hostBudget — the per-host politeness quota
- *     replacing the reference's wall-clock speed control
+ *     ascending; keep rank <= the host's budget — the per-host politeness
+ *     quota replacing the reference's wall-clock speed control
  *     (cola/functions/speed.py:232-248 → offline reading per SURVEY O6).
+ *     One gate, [[hostEligible]], serves every budget source: the fixed
+ *     hostBudget is a literal, and a per-host table (O7 decay, robots
+ *     crawl-delay caps) is a column that can only lower it. The gate
+ *     picks its plan from driver-known facts only: no table → the
+ *     literal window; a table → one bounded pass decides the broadcast
+ *     hint (`maxBroadcastHosts`) and the literal rank ceiling; salts > 1
+ *     → the hot/cold skew split, chosen from measured per-host counts.
  *  2. per-priority quota ∝ 2^-i of the wave grant (the deterministic
  *     equivalent of the reference's exponential time slices,
  *     cola/job/task.py:33,66-69): quota_i = floor(grant·2^(P-1-i)/(2^P-1)),
@@ -42,132 +49,141 @@ object Politeness {
     base.zipWithIndex.map { case (q, i) => if (i < rem) q + 1 else q }
   }
 
-  /** Step 1 via window — canonical small/medium path. */
-  def hostEligible(candidates: DataFrame, hostBudget: Int): DataFrame = {
-    val w = Window.partitionBy(col("host")).orderBy(col("priority").asc, col("seq").asc)
-    candidates.withColumn("__hr", row_number().over(w))
-      .filter(col("__hr") <= hostBudget)
-      .drop("__hr")
-  }
-
   /**
-   * Step 1 with PER-HOST caps (robots.txt crawl-delay, O6 variable form):
-   * hosts in `caps` (host, cap — already clamped ≤ maxK, see
-   * [[Robots.capsFromDelays]]) keep their top `cap` rows; absent hosts
-   * keep `defaultK`. Output ordering rule identical to [[hostEligible]].
+   * Step 1, the one per-host politeness gate: within each host, rank
+   * candidates by (priority, seq) and keep rank <= the host's budget.
    *
-   * Plan shape: the rank predicate keeps the LITERAL bound
-   * `__hr <= max(maxK, defaultK)` alongside the per-row cap so Spark's
-   * InferWindowGroupLimit still inserts a partial top-k below the
-   * window sort — each mapper pre-prunes to the literal ceiling and the
-   * per-host cap filters after; a cap-only (per-row) predicate would
-   * disable the pushdown and sort every candidate of every host. The
-   * caps side carries no broadcast hint for the same reason as
-   * [[Robots.filterAllowed]]: AQE broadcasts a measured-small table and
-   * falls back to the host-keyed exchange the window pays anyway.
+   * The budget is `defaultBudget` unless `perHost` (host, host_budget)
+   * names the host — the O7 decayed budgets of [[adaptiveHostBudgets]]
+   * and the robots crawl-delay caps of [[Robots.capsFromDelays]] are both
+   * such tables. A host listed twice keeps its lowest budget (the
+   * reference only ever lowers a rate, speed.py:226-227). Output keeps
+   * the caller's column order (bucketed writes are positional).
+   *
+   * Plan selection:
+   *  - No table: the bound is the literal, so Spark's InferWindowGroupLimit
+   *    puts a partial top-k below the window sort (each mapper pre-prunes
+   *    to the budget). No join, no extra column.
+   *  - A table: one bounded pass (stops after `maxBroadcastHosts` + 1
+   *    rows) counts it and takes its largest budget. Under the bound the
+   *    table joins with a broadcast hint and the rank keeps the literal
+   *    ceiling max(defaultBudget, largest budget) beside the per-host
+   *    column, which keeps WindowGroupLimit. Over it — at a 10^7-host
+   *    crawl a hint Spark obeys even at OOM size (VERDICT r3 #2) — the
+   *    join is left to the planner and the bound is the column alone.
+   *  - `salts > 1` (J5 skew): one decision pass reduces the per-host
+   *    counts, each against its host's own bound, to three driver scalars
+   *    (hot hosts, hot rows, total rows). No hot host: the input passes
+   *    through unchanged (rank <= count <= bound). A bounded hot set: the
+   *    hot-host list is collected and broadcast; cold rows pass a narrow
+   *    anti-join and only hot rows go through the salted two-phase rank.
+   *    More than `maxHotHosts` hot hosts, or hot rows above
+   *    `hotRowFraction` of the wave (where the split does more work than
+   *    ranking everything): the salted rank over every row, with no
+   *    broadcast of the hot set.
+   *
+   * Every branch returns the same rows as the plain window.
    */
-  def hostEligibleCapped(
+  def hostEligible(
       candidates: DataFrame,
-      caps: DataFrame,
-      defaultK: Int,
-      maxK: Int): DataFrame = {
-    require(defaultK >= 1 && maxK >= 1)
-    val ceiling = math.max(maxK, defaultK)
-    val w = Window.partitionBy(col("host")).orderBy(col("priority").asc, col("seq").asc)
-    candidates
-      .join(caps.select(col("host"), col("cap").as("__cap")), Seq("host"), "left")
-      .withColumn("__hr", row_number().over(w))
-      .filter(col("__hr") <= lit(ceiling) &&
-        col("__hr") <= coalesce(col("__cap"), lit(defaultK)))
-      .drop("__hr", "__cap")
-  }
-
-  /**
-   * Step 1 at scale: two-phase salted top-k. A mega-host (J5 skew) would
-   * serialize the window's single per-host partition; instead rank within
-   * (host, salt) shards first — each shard keeps at most hostBudget rows,
-   * shrinking the final per-host rank input to ≤ salts·hostBudget rows per
-   * host regardless of skew. Identical output to [[hostEligible]].
-   */
-  def hostEligibleSalted(candidates: DataFrame, hostBudget: Int, salts: Int): DataFrame = {
-    require(salts >= 1)
-    val salted = candidates.withColumn("__salt",
-      pmod(xxhash64(col("url_canon")), lit(salts.toLong)).cast("int"))
-    val w1 = Window.partitionBy(col("host"), col("__salt"))
-      .orderBy(col("priority").asc, col("seq").asc)
-    val partial = salted.withColumn("__pr", row_number().over(w1))
-      .filter(col("__pr") <= hostBudget)
-      .drop("__pr", "__salt")
-    val w2 = Window.partitionBy(col("host")).orderBy(col("priority").asc, col("seq").asc)
-    partial.withColumn("__hr", row_number().over(w2))
-      .filter(col("__hr") <= hostBudget)
-      .drop("__hr")
-  }
-
-  /**
-   * Step 1 at frontier scale: adaptive skew split (the J5 "saltsPerHost
-   * adapts" rule). A real frontier has ~10^7 hosts of which only
-   * mega-hosts exceed the politeness budget; ranking EVERY host through
-   * a window means two full shuffle+sorts of the wave for a constraint
-   * that binds almost nowhere. Instead: one cheap per-host count
-   * aggregate (map-side partial → tiny shuffle) finds the hosts with
-   * count > hostBudget; rows of cold hosts are all eligible by
-   * definition (rank ≤ count ≤ budget) and pass through a broadcast
-   * anti-join (narrow, no shuffle); only hot-host rows — the mega-host
-   * skew — go through the salted two-phase top-k. Output is provably
-   * identical to [[hostEligible]].
-   *
-   * Two scale guards (both measured failure modes, VERDICT r2 #1/#4):
-   *
-   *  - **Bounded decision pass.** The same per-host count aggregate that
-   *    finds the hot hosts is first reduced to THREE driver scalars
-   *    (hot-host count, hot-row count, total rows) — one tiny job whose
-   *    shuffle is |hosts| rows, never the wave. If the hot set is large
-   *    (`> maxHotHosts`, a broadcast that could OOM as a *hint* Spark
-   *    obeys) or hot rows dominate (`> hotRowFraction` of the wave, where
-   *    the split does strictly more work than ranking everything), fall
-   *    back to [[hostEligibleSalted]] — identical output, no broadcast.
-   *
-   *  - **No recompute fan-out.** The decision pass also COLLECTS the
-   *    (now provably bounded) hot-host list, which enters the main plan
-   *    as a broadcast local relation — the per-host aggregate is never
-   *    re-evaluated inside the split plan (the r2 regression: the
-   *    aggregate plus both join consumers each recomputed an input that
-   *    ended at a UDF projection, not a shuffle). When the input is not
-   *    already cached, it is additionally repartitioned by host once so
-   *    the cold/hot branches share a single exchange via ReuseExchange;
-   *    a cached input (the engine's persisted frontier) skips the extra
-   *    shuffle and pays two cache reads instead.
-   */
-  def hostEligibleAdaptive(candidates: DataFrame, hostBudget: Int, salts: Int,
-      maxHotHosts: Int = 1000000, hotRowFraction: Double = 0.5): DataFrame = {
+      defaultBudget: Int,
+      perHost: Option[DataFrame] = None,
+      salts: Int = 1,
+      maxHotHosts: Int = 1000000,
+      hotRowFraction: Double = 0.5,
+      maxBroadcastHosts: Long = 1000000L): DataFrame = {
+    val outCols = candidates.columns.map(col).toSeq
+    val table = perHost.map(budgetTable(_, defaultBudget, maxBroadcastHosts))
+    // the per-host bound: the literal, or the table's budget as `__hb`
+    val bound = if (table.isEmpty) lit(defaultBudget) else col("__hb")
+    val ceiling = table.flatMap(_._2)
+    def withBound(df: DataFrame): DataFrame = table.fold(df) { case (t, _) =>
+      df.join(t, Seq("host"), "left")
+        .withColumn("__hb", coalesce(col("__hb"), lit(defaultBudget)))
+    }
+    if (salts <= 1)
+      return rankWithin(withBound(candidates), Seq(col("host")), "__hr", bound, ceiling)
+        .select(outCols: _*)
     // the per-host counts are tiny (|hosts| rows) but cost a full input
     // pass to build — persist them so the decision scalars and the
     // hot-host list share ONE input aggregation instead of two
-    val hostCounts = candidates.groupBy(col("host")).agg(count(lit(1)).as("__hn"))
+    val counts = withBound(candidates.groupBy(col("host")).agg(count(lit(1)).as("__hn")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val stats = hostCounts.agg(
-          sum(when(col("__hn") > hostBudget, 1L).otherwise(0L)).as("nHot"),
-          sum(when(col("__hn") > hostBudget, col("__hn")).otherwise(0L)).as("hotRows"),
-          sum(col("__hn")).as("total"))
+      val isHot = col("__hn") > bound
+      val stats = counts.agg(
+          sum(when(isHot, 1L).otherwise(0L)),
+          sum(when(isHot, col("__hn")).otherwise(0L)),
+          sum(col("__hn")))
         .collect()(0)
-      val nHot = Option(stats.get(0)).fold(0L)(_.asInstanceOf[Long])
-      val hotRows = Option(stats.get(1)).fold(0L)(_.asInstanceOf[Long])
-      val total = Option(stats.get(2)).fold(0L)(_.asInstanceOf[Long])
-      if (nHot == 0) return candidates // every host fits its budget
+      def scalar(i: Int): Long = if (stats.isNullAt(i)) 0L else stats.getLong(i)
+      val (nHot, hotRows, total) = (scalar(0), scalar(1), scalar(2))
+      if (nHot == 0) return candidates
       if (nHot > maxHotHosts || hotRows > total * hotRowFraction)
-        return hostEligibleSalted(candidates, hostBudget, salts)
-      val spark = candidates.sparkSession
-      import spark.implicits._
-      val hotSeq = hostCounts.filter(col("__hn") > hostBudget)
-        .select(col("host")).as[String].collect().toSeq
-      hotEligiblePlan(candidates, hostBudget, salts, broadcast(hotSeq.toDF("host")))
-    } finally hostCounts.unpersist()
+        return saltedRank(withBound(candidates), salts, bound, ceiling).select(outCols: _*)
+      // the hot list is bounded now: collect it once, so the split plan
+      // never re-evaluates the per-host aggregate (the r2 regression)
+      val hotList = counts.filter(isHot)
+        .select((if (table.isEmpty) Seq("host") else Seq("host", "__hb")).map(col): _*)
+      val hotDf = broadcast(candidates.sparkSession.createDataFrame(
+        java.util.Arrays.asList(hotList.collect(): _*), hotList.schema))
+      // Cached input → both branches re-read the cache. Uncached input →
+      // repartition ONCE so the branches share a single exchange via
+      // ReuseExchange instead of recomputing the input subtree per
+      // branch. The boundary key must be skew-free: seq is unique by
+      // contract (repartitioning by host would funnel a mega-host — the
+      // exact J5 skew this path exists to absorb — into one task).
+      val boundary = if (isInputCached(candidates)) candidates else candidates.repartition(col("seq"))
+      val cold = boundary.join(hotDf.select(col("host")), Seq("host"), "left_anti")
+      val hot = boundary.join(hotDf, Seq("host"), if (table.isEmpty) "left_semi" else "inner")
+      cold.unionByName(saltedRank(hot, salts, bound, ceiling).select(outCols: _*))
+    } finally counts.unpersist()
   }
 
-  /** The split plan of [[hostEligibleAdaptive]] once the hot-host list is
-   *  a collected local relation. */
+  /** The (host, `__hb`) side of a per-host budget table, broadcast-hinted
+   *  when a bounded pass finds at most `maxBroadcastHosts` rows; with it,
+   *  the literal rank ceiling max(defaultBudget, largest budget). */
+  private def budgetTable(perHost: DataFrame, defaultBudget: Int,
+      maxBroadcastHosts: Long): (DataFrame, Option[Int]) = {
+    // the +1 is computed in the CAPPED domain (a caller passing a bound
+    // near Long.MaxValue to "disable the guard" must not overflow to
+    // limit(0), which would mislabel EVERY table as small)
+    val lim = (maxBroadcastHosts.min(Int.MaxValue.toLong - 1) + 1).toInt
+    val r = perHost.select(col("host_budget")).limit(lim)
+      .agg(count(lit(1)), max(col("host_budget"))).collect()(0)
+    // a host listed twice would otherwise duplicate its candidates
+    val t = perHost.groupBy(col("host")).agg(min(col("host_budget")).as("__hb"))
+    if (r.getLong(0) > maxBroadcastHosts) (t, None)
+    else {
+      val top = if (r.isNullAt(1)) 0L else r.getAs[Number](1).longValue
+      (broadcast(t), Some(math.min(math.max(top, defaultBudget.toLong), Int.MaxValue).toInt))
+    }
+  }
+
+  /** Keep the first rows of each `keys` partition by (priority, seq) while
+   *  their rank is within `bound` (and the literal `ceiling`, which lets
+   *  the rank filter compile to WindowGroupLimit). */
+  private def rankWithin(in: DataFrame, keys: Seq[Column], rank: String,
+      bound: Column, ceiling: Option[Int]): DataFrame = {
+    val w = Window.partitionBy(keys: _*).orderBy(col("priority").asc, col("seq").asc)
+    val r = col(rank)
+    in.withColumn(rank, row_number().over(w))
+      .filter(ceiling.fold(r <= bound)(c => r <= lit(c) && r <= bound))
+      .drop(rank)
+  }
+
+  /** Two-phase salted top-k: rank within (host, salt) shards first — each
+   *  keeps at most its bound — so the per-host rank reads at most
+   *  salts × bound rows per host, however skewed the host. */
+  private def saltedRank(in: DataFrame, salts: Int, bound: Column,
+      ceiling: Option[Int]): DataFrame = {
+    val salted = in.withColumn("__salt",
+      pmod(xxhash64(col("url_canon")), lit(salts.toLong)).cast("int"))
+    val partial = rankWithin(salted, Seq(col("host"), col("__salt")), "__pr", bound, ceiling)
+      .drop("__salt")
+    rankWithin(partial, Seq(col("host")), "__hr", bound, ceiling)
+  }
+
   /** Caching detection through DERIVED frames (df.storageLevel only sees
    *  the exact frame): a cached ancestor shows up as an InMemoryRelation
    *  in the optimized plan. */
@@ -175,144 +191,6 @@ object Politeness {
     df.queryExecution.optimizedPlan.collectFirst {
       case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
     }.isDefined
-
-  private def hotEligiblePlan(candidates: DataFrame, hostBudget: Int,
-      salts: Int, hotDf: DataFrame): DataFrame = {
-    // Cached input → both join branches re-read the cache, no boundary
-    // needed. Uncached input → repartition ONCE so the branches share a
-    // single exchange via ReuseExchange instead of recomputing the input
-    // subtree per branch. The boundary key must be skew-free: seq is
-    // unique by contract (repartitioning by host would funnel a mega-host
-    // — the exact J5 skew this operator exists to absorb — into one
-    // straggler task).
-    val boundary = if (isInputCached(candidates)) candidates else candidates.repartition(col("seq"))
-    val cold = boundary.join(hotDf, Seq("host"), "left_anti")
-    val hot = boundary.join(hotDf, Seq("host"), "left_semi")
-    cold.unionByName(hostEligibleSalted(hot, hostBudget, salts))
-  }
-
-  /**
-   * Per-host-budget politeness gate: like [[hostEligible]] but each host's
-   * quota comes from a `budgets` table (host STRING, host_budget INT) —
-   * the output of [[adaptiveHostBudgets]] — with `defaultBudget` for
-   * hosts not in the table. The rank bound is a column, so the
-   * WindowGroupLimit partial pushdown does not apply; use after the
-   * adaptive hot/cold split (or on the hot subset) at scale.
-   *
-   * The broadcast hint is COUNT-GUARDED (the poisoned-bundle pattern,
-   * CrawlJob's bundle gate): `budgets` is one row per host — at a
-   * 10^7-host crawl a bare hint would be a multi-hundred-MB broadcast
-   * Spark obeys even at OOM size (VERDICT r3 Wrong #2). Under
-   * `maxBroadcastHosts` the hint is safe by measurement; above it the
-   * join plans as a regular shuffle join (AQE may still choose broadcast
-   * at runtime if the actual bytes are small — its own size check, not a
-   * hint).
-   */
-  def hostEligibleBudgets(candidates: DataFrame, budgets: DataFrame,
-      defaultBudget: Int, maxBroadcastHosts: Long = 1000000L): DataFrame = {
-    val outCols = candidates.columns.map(col).toSeq
-    val b = budgets.select(col("host"), col("host_budget"))
-    // bounded count: stop scanning once the guard is decided. The +1 is
-    // computed in the CAPPED domain (a caller passing a bound near
-    // Long.MaxValue to "disable the guard" must not overflow to limit(0),
-    // which would mislabel EVERY table as small and hint the broadcast)
-    val lim = (maxBroadcastHosts.min(Int.MaxValue.toLong - 1) + 1).toInt
-    val small = b.limit(lim).count() <= maxBroadcastHosts
-    val joined = candidates.join(
-      if (small) broadcast(b) else b, Seq("host"), "left")
-    val w = Window.partitionBy(col("host")).orderBy(col("priority").asc, col("seq").asc)
-    joined.withColumn("__hr", row_number().over(w))
-      .filter(col("__hr") <= coalesce(col("host_budget"), lit(defaultBudget)))
-      .select(outCols: _*) // original column order (bucketed writes are positional)
-  }
-
-  /** Salted two-phase top-k where the per-host bound is the already
-   *  attached `__hb` column; restores the caller's column set/order. */
-  private def saltedRankByBudgetCol(in: DataFrame, salts: Int,
-      outCols: Seq[Column]): DataFrame = {
-    val salted = in.withColumn("__salt",
-      pmod(xxhash64(col("url_canon")), lit(salts.toLong)).cast("int"))
-    val w1 = Window.partitionBy(col("host"), col("__salt"))
-      .orderBy(col("priority").asc, col("seq").asc)
-    val partial = salted.withColumn("__pr", row_number().over(w1))
-      .filter(col("__pr") <= col("__hb"))
-      .drop("__pr", "__salt")
-    val w2 = Window.partitionBy(col("host")).orderBy(col("priority").asc, col("seq").asc)
-    partial.withColumn("__hr", row_number().over(w2))
-      .filter(col("__hr") <= col("__hb"))
-      .select(outCols: _*)
-  }
-
-  /** [[hostEligibleBudgets]] at scale when the budgets table itself is
-   *  unbounded: salted two-phase ranking with the per-host bound as a
-   *  column. No broadcast hint anywhere (AQE sizes the budgets join at
-   *  runtime); each (host, salt) shard keeps at most its own budget, so a
-   *  mega-host never funnels into one window task. Output ≡
-   *  [[hostEligibleBudgets]]. */
-  def hostEligibleBudgetsSalted(candidates: DataFrame, budgets: DataFrame,
-      defaultBudget: Int, salts: Int): DataFrame = {
-    require(salts >= 1)
-    val outCols = candidates.columns.map(col).toSeq
-    val withB = candidates
-      .join(budgets.select(col("host"), col("host_budget")), Seq("host"), "left")
-      .withColumn("__hb", coalesce(col("host_budget"), lit(defaultBudget)))
-      .drop("host_budget")
-    saltedRankByBudgetCol(withB, salts, outCols)
-  }
-
-  /** [[hostEligibleBudgets]] with the adaptive hot/cold skew split (the
-   *  J5 treatment [[hostEligibleAdaptive]] gives the fixed-budget gate —
-   *  without it, a decayed-budgets run would rank every host through one
-   *  plain window and a mega-host funnels into a single task):
-   *
-   *   - per-host counts join the budgets table (tiny ⋈ tiny) so "hot"
-   *     means count > the host's OWN budget;
-   *   - same bounded decision pass and guards as hostEligibleAdaptive
-   *     (three driver scalars; above `maxHotHosts`/`hotRowFraction` fall
-   *     back to [[hostEligibleBudgetsSalted]] — identical output, no
-   *     driver collect);
-   *   - cold rows pass through a broadcast anti-join; hot rows carry
-   *     their budget from the collected (bounded) hot list and go through
-   *     the salted two-phase rank.
-   *
-   *  Output provably ≡ [[hostEligibleBudgets]]. */
-  def hostEligibleBudgetsAdaptive(candidates: DataFrame, budgets: DataFrame,
-      defaultBudget: Int, salts: Int,
-      maxHotHosts: Int = 1000000, hotRowFraction: Double = 0.5): DataFrame = {
-    if (salts <= 1) return hostEligibleBudgets(candidates, budgets, defaultBudget)
-    val outCols = candidates.columns.map(col).toSeq
-    val hostCounts = candidates.groupBy(col("host")).agg(count(lit(1)).as("__hn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val withB = hostCounts
-        .join(budgets.select(col("host"), col("host_budget")), Seq("host"), "left")
-        .withColumn("__hb", coalesce(col("host_budget"), lit(defaultBudget)))
-      val stats = withB.agg(
-          sum(when(col("__hn") > col("__hb"), 1L).otherwise(0L)).as("nHot"),
-          sum(when(col("__hn") > col("__hb"), col("__hn")).otherwise(0L)).as("hotRows"),
-          sum(col("__hn")).as("total"))
-        .collect()(0)
-      val nHot = Option(stats.get(0)).fold(0L)(_.asInstanceOf[Long])
-      val hotRows = Option(stats.get(1)).fold(0L)(_.asInstanceOf[Long])
-      val total = Option(stats.get(2)).fold(0L)(_.asInstanceOf[Long])
-      if (nHot == 0) return candidates // every host fits its budget
-      if (nHot > maxHotHosts || hotRows > total * hotRowFraction)
-        return hostEligibleBudgetsSalted(candidates, budgets, defaultBudget, salts)
-      val spark = candidates.sparkSession
-      import spark.implicits._
-      val hotSeq = withB.filter(col("__hn") > col("__hb"))
-        .select(col("host"), col("__hb").cast("int"))
-        .as[(String, Int)].collect().toSeq
-      val hotDf = broadcast(hotSeq.toDF("host", "__hb"))
-      val boundary =
-        if (isInputCached(candidates)) candidates
-        else candidates.repartition(col("seq")) // see hotEligiblePlan
-      val cold = boundary.join(hotDf.select("host"), Seq("host"), "left_anti")
-        .select(outCols: _*)
-      val hot = boundary.join(hotDf, Seq("host"))
-      cold.unionByName(saltedRankByBudgetCol(hot, salts, outCols))
-    } finally hostCounts.unpersist()
-  }
 
   /**
    * O7 adaptive throttling, offline reading (cola/functions/speed.py:
@@ -430,18 +308,8 @@ object Politeness {
     val clamped = candidates.withColumn("priority", clampPriority(col("priority"), nPriorities))
     // O7 wired end-to-end: a decayed per-host budgets table (the output of
     // [[adaptiveHostBudgets]] over a previous run's host metrics) replaces
-    // the uniform quota — hosts absent from the table keep `hostBudget`
-    // (the reference only ever LOWERS a banned host's rate). The salted
-    // configuration keeps its adaptive skew split (a mega-host must not
-    // funnel into one plain-window task just because budgets are on).
-    val eligible = hostBudgets match {
-      case Some(b) =>
-        if (salts <= 1) hostEligibleBudgets(clamped, b, hostBudget)
-        else hostEligibleBudgetsAdaptive(clamped, b, hostBudget, salts)
-      case None =>
-        if (salts <= 1) hostEligible(clamped, hostBudget)
-        else hostEligibleAdaptive(clamped, hostBudget, salts)
-    }
+    // the uniform quota for the hosts it names
+    val eligible = hostEligible(clamped, hostBudget, hostBudgets, salts)
     if (priorityQuotas(grant, nPriorities).min >= inputUpperBound) eligible
     else applyQuotas(eligible, grant, nPriorities)
   }

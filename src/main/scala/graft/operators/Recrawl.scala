@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
  * "Effective Page Refresh Policies for Web Crawlers", TODS 2003). This
  * operator is the estimation+allocation half reading a snapshot history
  * table; the emitted schedule feeds the same politeness machinery as a
- * fresh wave ([[Politeness.hostEligible]] shape).
+ * fresh wave (the literal-bound [[Politeness.hostEligible]] window).
  *
  * Scale shape: one hash exchange on `url` serves BOTH the lag-window
  * and the per-URL aggregate (the aggregate reuses the window's

@@ -120,12 +120,13 @@ object Robots {
    *  a wave's politeness window, clamped to [1, maxK] (a delay longer
    *  than the window still grants ONE fetch — the crawl must progress;
    *  the cap ceiling keeps the quota inside the top-k the politeness
-   *  window already ranks). Feeds [[Politeness.hostEligibleCapped]]. */
+   *  window already ranks). Emits (host, host_budget), the per-host table
+   *  [[Politeness.hostEligible]] takes. */
   def capsFromDelays(delays: DataFrame, windowSecs: Double, maxK: Int): DataFrame = {
     require(windowSecs > 0 && maxK >= 1)
     delays.select(col("host"),
       least(greatest(floor(lit(windowSecs) / col("delay_secs")), lit(1L)),
-        lit(maxK.toLong)).cast("int").as("cap"))
+        lit(maxK.toLong)).cast("int").as("host_budget"))
   }
 
   /** Parse sitemap XML bodies into one row per `<url>` entry: appends

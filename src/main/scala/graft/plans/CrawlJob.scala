@@ -50,13 +50,13 @@ import graft.operators.{Dedup, ParserDispatch, ParserRule, Politeness}
  *                    urls.py:62-73): first match dispatches, no match
  *                    drops the URL; see [[graft.operators.ParserDispatch]]
  * @param salts       politeness salting shards for mega-hosts (J5)
- * @param useBloom    per-bucket seen pre-filter in front of the exact
- *                    anti-join (D2) — output provably identical either way
- * @param seenFilter  pre-filter sketch kind: "bloom" (reference-sized
- *                    Bloom) or "cuckoo" (Fan et al. 2014 — deletable,
- *                    ~0.012% fpr; see [[graft.operators.CuckooFilter]]);
- *                    switching kinds on an existing checkpoint triggers
- *                    one filter rebuild from the exact seen table
+ * @param seenFilter  per-bucket seen pre-filter in front of the exact
+ *                    anti-join (D2) — output provably identical with any
+ *                    value: "none", "bloom" (reference-sized Bloom) or
+ *                    "cuckoo" (Fan et al. 2014 — deletable, ~0.012% fpr;
+ *                    see [[graft.operators.CuckooFilter]]); switching
+ *                    kinds on an existing checkpoint triggers one filter
+ *                    rebuild from the exact seen table
  * @param extract     run text extraction on fetched pages (the X1/X2 work);
  *                    off for pure frontier-throughput benchmarks
  */
@@ -77,8 +77,7 @@ case class CrawlSettings(
     urlPattern: String = ".*",
     salts: Int = 1,
     numBuckets: Int = 32,
-    useBloom: Boolean = true,
-    seenFilter: String = "bloom", // bloom | cuckoo (north rule: "bloom/cuckoo URL-seen")
+    seenFilter: String = "bloom", // none | bloom | cuckoo (north rule: "bloom/cuckoo URL-seen")
     bloomCapacity: Long = 1000000L, // D3 floor (cola/job/__init__.py:48)
     extract: Boolean = true,
     hostMetrics: Boolean = false, // O7 evidence: write per-(wave, host) fetch outcomes
@@ -421,7 +420,7 @@ class CrawlJob(
     // filter state (first run, or resume onto a bloom-less dir) rebuilds
     // it from the committed seen table once.
     val bloomStore: Option[graft.operators.BloomStore] =
-      if (settings.useBloom)
+      if (settings.seenFilter != "none")
         Some(new graft.operators.BloomStore(spark, workDir, settings.numBuckets,
           math.max(settings.bloomCapacity / settings.numBuckets, 1024),
           kind = settings.seenFilter))
@@ -700,7 +699,7 @@ class CrawlJob(
               .select("url_hash", "url_canon", "label", "parent_seq", "link_idx", "parent_depth")
             freshLabels = Dedup.dedupWave(spark, labels, seen,
                 Seq(col("parent_seq"), col("link_idx")),
-                numBuckets = settings.numBuckets, bloomStore = bloomStore)
+                bloomStore = bloomStore)
               .transform(persistWave)
             val memberUdf = udf((label: String) => bs.memberUrls(label))
             val members = enrich(freshLabels
@@ -727,7 +726,7 @@ class CrawlJob(
         // ---- D1 dedup gate ----
         val fresh = Dedup.dedupWave(spark, candidates, seen,
             Seq(col("parent_seq"), col("link_idx"), col("member_idx")),
-            numBuckets = settings.numBuckets, bloomStore = bloomStore)
+            bloomStore = bloomStore)
         // nNew (and the admitted lineage) rides the dense-seq count pass;
         // the cache builds at the seen write (the first action over
         // newEntries)
@@ -994,7 +993,7 @@ class CrawlJob(
       .withColumn("eligible_wave", lit(0))
     val passed = Dedup.dedupWave(spark, entries, seen,
       Seq(col("o_src"), col("o_wave"), col("o_priority"), col("o_seq")),
-      numBuckets = settings.numBuckets, bloomStore = bloomStore)
+      bloomStore = bloomStore)
     val (seeded, n) = withDenseSeq(passed,
       Seq(col("o_src").asc, col("o_wave").asc, col("o_priority").asc, col("o_seq").asc),
       waveBase(w), "seq")

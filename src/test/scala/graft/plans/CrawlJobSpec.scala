@@ -43,7 +43,7 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val base = CrawlSettings(
     size = 120, nPriorities = 1, hostBudget = 3, waveCap = 60,
     retries = 1, maxWaves = 30, urlPattern = Fixtures.UrlPattern,
-    extract = false, useBloom = false, numBuckets = 8)
+    extract = false, seenFilter = "none", numBuckets = 8)
 
   private def runEngine(settings: CrawlSettings, dir: String,
       priorityExpr: Column => Column = _ => lit(0)): (CrawlJob, CrawlSummary) = {
@@ -174,50 +174,6 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(joined.collect().length == 500)
       assert(CrawlJob.planBroadcasts(joined.queryExecution.executedPlan).size == 1, s"aqe=$aqe")
     } finally spark.conf.set("spark.sql.adaptive.enabled", oldAqe)
-  }
-
-  test("adaptive skew politeness equals the plain per-host window (J5)") {
-    import graft.operators.Politeness
-    // skewed synthetic frontier: one mega-host + a long tail, multi-priority
-    val cands = FrontierBenchLike.skewed(spark, 4000)
-    val plain = Politeness.hostEligible(cands, 5)
-      .select("host", "priority", "seq").collect().map(_.toSeq).toSet
-    val adaptive = Politeness.hostEligibleAdaptive(cands, 5, 3)
-      .select("host", "priority", "seq").collect().map(_.toSeq).toSet
-    assert(adaptive == plain)
-    // hot-host rows are clipped to the budget, cold hosts pass untouched
-    val perHost = Politeness.hostEligibleAdaptive(cands, 5, 3)
-      .groupBy("host").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(perHost.values.forall(_ <= 5))
-  }
-
-  test("adaptive politeness split path (cold hosts under budget) equals the window") {
-    import graft.operators.Politeness
-    // budget 30: only the mega-host exceeds it (tail hosts carry ~14 rows
-    // at n=1300), so the broadcast split path — not the salted fallback —
-    // is exercised and must still equal the plain window
-    val cands = FrontierBenchLike.skewed(spark, 1300)
-    val plain = Politeness.hostEligible(cands, 30)
-      .select("host", "priority", "seq").collect().map(_.toSeq).toSet
-    val adaptive = Politeness.hostEligibleAdaptive(cands, 30, 3)
-      .select("host", "priority", "seq").collect().map(_.toSeq).toSet
-    assert(adaptive == plain)
-  }
-
-  test("adaptive politeness with every host hot falls back to salted — no broadcast") {
-    import graft.operators.Politeness
-    // hostBudget=1 over the skewed frontier: EVERY host exceeds its
-    // budget (the r2 hazard: the hot-host set as an unbounded broadcast
-    // hint); the bounded decision pass must route to the salted path —
-    // same rows as the window, and no broadcast exchange in the plan
-    val cands = FrontierBenchLike.skewed(spark, 4000)
-    val out = Politeness.hostEligibleAdaptive(cands, 1, 4)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastExchange"),
-      "every-host-hot input must not broadcast the hot-host set")
-    val plain = Politeness.hostEligible(cands, 1)
-      .select("host", "priority", "seq").collect().map(_.toSeq).toSet
-    assert(out.select("host", "priority", "seq").collect().map(_.toSeq).toSet == plain)
   }
 
   test("schedule with a driver-known input bound skips quotas with identical output") {
@@ -367,72 +323,6 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out == Map("a" -> 4, "b" -> 1, "c" -> 10, "d" -> 10))
   }
 
-  test("O7 budget gate: decayed per-host budgets bound the next run's schedule") {
-    import graft.operators.Politeness
-    val sp = spark
-    import sp.implicits._
-    val cands = FrontierBenchLike.skewed(spark, 900)
-    val mega = "http://mega.example.com"
-    val budgets = Seq((mega, 2)).toDF("host", "host_budget")
-    val out = Politeness.hostEligibleBudgets(cands, budgets, defaultBudget = 4)
-      .groupBy("host").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(out(mega) == 2)
-    assert(out.filterNot(_._1 == mega).values.forall(_ <= 4))
-    // matches the fixed-budget window when every budget equals the default
-    val fixed = Politeness.hostEligible(cands, 4)
-      .select("host", "seq").collect().map(_.toSeq).toSet
-    val viaTable = Politeness.hostEligibleBudgets(cands, budgets.limit(0), 4)
-      .select("host", "seq").collect().map(_.toSeq).toSet
-    assert(fixed == viaTable)
-    // the scale paths are output-identical to the plain window gate: the
-    // salted column-bound rank, and the adaptive hot/cold split (both the
-    // collected-hot-list plan and the salted fallback under a tiny
-    // maxHotHosts) — a decayed-budgets run keeps the J5 skew treatment
-    val plain = Politeness.hostEligibleBudgets(cands, budgets, 4)
-      .select("host", "seq").collect().map(_.toSeq).toSet
-    val saltedB = Politeness.hostEligibleBudgetsSalted(cands, budgets, 4, salts = 4)
-      .select("host", "seq").collect().map(_.toSeq).toSet
-    assert(saltedB == plain, "salted column-bound rank diverged")
-    val adaptiveB = Politeness.hostEligibleBudgetsAdaptive(cands, budgets, 4, salts = 4)
-      .select("host", "seq").collect().map(_.toSeq).toSet
-    assert(adaptiveB == plain, "adaptive hot/cold budget split diverged")
-    val fallbackB = Politeness.hostEligibleBudgetsAdaptive(cands, budgets, 4,
-        salts = 4, maxHotHosts = 0)
-      .select("host", "seq").collect().map(_.toSeq).toSet
-    assert(fallbackB == plain, "salted fallback (guard tripped) diverged")
-    // column order is preserved (bucketed writes are positional)
-    assert(Politeness.hostEligibleBudgetsAdaptive(cands, budgets, 4, salts = 4)
-      .columns.toSeq == cands.columns.toSeq)
-  }
-
-  test("O7 budget gate: broadcast hint is count-guarded (VERDICT r3 #2)") {
-    import graft.operators.Politeness
-    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-    val sp = spark
-    import sp.implicits._
-    val cands = FrontierBenchLike.skewed(spark, 300)
-    val budgets = Seq(("http://mega.example.com", 2), ("http://h1.example.com", 3),
-      ("http://h2.example.com", 5)).toDF("host", "host_budget")
-    def hasHint(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.analyzed.collectFirst { case h: ResolvedHint => h }.isDefined
-    // under the bound: the hint is present and the runtime plan broadcasts
-    val small = Politeness.hostEligibleBudgets(cands, budgets, 4)
-    assert(hasHint(small), "bounded budgets table should carry the broadcast hint")
-    small.count()
-    val smallPlan = small.queryExecution.executedPlan.toString
-    assert(smallPlan.contains("BroadcastHashJoin"),
-      s"bounded budgets join did not broadcast:\n$smallPlan")
-    // above the bound: NO hint — Spark obeys hints even at OOM size, so an
-    // unbounded per-host table must reach the planner unhinted (AQE may
-    // still pick broadcast from actual runtime bytes; that is its own
-    // size check, not an obligation)
-    val large = Politeness.hostEligibleBudgets(cands, budgets, 4, maxBroadcastHosts = 1)
-    assert(!hasHint(large), "over-bound budgets table must not be hint-broadcast")
-    // and the guard changes nothing about the output
-    assert(small.select("host", "seq").collect().map(_.toSeq).toSet ==
-      large.select("host", "seq").collect().map(_.toSeq).toSet)
-  }
-
   test("O7 wired end-to-end: run-1 banned windows decay budgets gating run 2 (sim ≡)") {
     import graft.operators.Politeness
     val sp = spark
@@ -497,7 +387,7 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bloom pre-filter + salted politeness change nothing (identical schedule)") {
-    val (job, _) = runEngine(base.copy(useBloom = true, bloomCapacity = 4096, salts = 4),
+    val (job, _) = runEngine(base.copy(seenFilter = "bloom", bloomCapacity = 4096, salts = 4),
       tmpDir("bloomsalt"))
     assert(scheduleTuples(job) == scheduleTuples(fullRun._1))
     assert(job.seenTable.count() == fullRun._1.seenTable.count())
@@ -508,7 +398,7 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     // whole wave loop with kind=cuckoo must schedule EXACTLY what the
     // filterless run schedules (the pre-filter only routes rows)
     val (job, _) = runEngine(
-      base.copy(useBloom = true, seenFilter = "cuckoo", bloomCapacity = 4096, salts = 4),
+      base.copy(seenFilter = "cuckoo", bloomCapacity = 4096, salts = 4),
       tmpDir("cuckoosalt"))
     assert(scheduleTuples(job) == scheduleTuples(fullRun._1))
     assert(job.seenTable.count() == fullRun._1.seenTable.count())
@@ -672,7 +562,7 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       size = -1, waveCap = 24, hostBudget = 4, maxWaves = 40,
       nPriorities = 3,
       retries = 99, networkRetries = 1, serverRetries = 0, serverIgnore = true,
-      salts = 3, useBloom = true, bloomCapacity = 4096,
+      salts = 3, seenFilter = "bloom", bloomCapacity = 4096,
       incPasses = 1,
       parsers = Seq(
         ParserRule("^http://host[0-9]\\.example\\.com/p/[0-9]+.*$", "extract"),
@@ -731,8 +621,12 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         serverSpanWaves = 1 + nx(2),
         maxWaves = 25,
         salts = 1 + nx(3),
-        useBloom = nx(2) == 1, bloomCapacity = 4096,
-        seenFilter = if (nx(2) == 1) "cuckoo" else "bloom",
+        // two draws, as when the filter switch and its kind were two fields
+        seenFilter = {
+          val on = nx(2) == 1
+          val kind = if (nx(2) == 1) "cuckoo" else "bloom"
+          if (on) kind else "none"
+        }, bloomCapacity = 4096,
         incPasses = nx(2),
         parsers = if (nx(2) == 1) twoRules else Seq.empty,
         bundles = if (nx(2) == 1) Some(bs) else None)
@@ -815,7 +709,7 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     // wave's partial outputs on disk; the resumed run must drop them and
     // end exactly where the uninterrupted run and the simulator do. The
     // bloom filter is on so its delta write is one of the points.
-    val settings = base.copy(useBloom = true, bloomCapacity = 4096)
+    val settings = base.copy(seenFilter = "bloom", bloomCapacity = 4096)
     val (whole, wholeSummary) = runEngine(settings, tmpDir("whole"))
     val simScheduled = fullSim.schedule.groupBy(_.wave).map { case (w, s) => w -> s.size.toLong }
     assert(scheduleTuples(whole) == simTuples(fullSim))
@@ -1077,7 +971,7 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 /** Deterministic skewed frontier for politeness unit checks. */
-private[plans] object FrontierBenchLike {
+private[graft] object FrontierBenchLike {
   def skewed(spark: SparkSession, n: Long): DataFrame = {
     spark.range(0L, n).selectExpr(
       """concat('http://', case when id % 3 = 0 then 'mega'

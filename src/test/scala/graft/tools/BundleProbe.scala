@@ -24,7 +24,7 @@ object BundleProbe {
     })
     val settings = CrawlSettings(size = 120, nPriorities = 1, hostBudget = 3, waveCap = 60,
       retries = 1, maxWaves = 30, urlPattern = Fixtures.UrlPattern,
-      extract = false, useBloom = false, numBuckets = 8, bundles = Some(bs))
+      extract = false, seenFilter = "none", numBuckets = 8, bundles = Some(bs))
     val sim = new ColaSimulator(settings, pagesMap)
     sim.run(Fixtures.seeds(V))
     println(s"PROBE sim seen=${sim.seen.size} labels=${sim.seen.count(_.startsWith("bundle://"))} schedule=${sim.schedule.size}")

@@ -21,7 +21,7 @@ object CrawlAtScale {
     val settings = CrawlSettings(size = -1L, nPriorities = 3, hostBudget = 2000,
       waveCap = 20000L, retries = 1, maxWaves = 15,
       urlPattern = Fixtures.UrlPattern, salts = 32, numBuckets = 64,
-      useBloom = true, bloomCapacity = 2 * v, extract = false)
+      bloomCapacity = 2 * v, extract = false)
     val priorityExpr = (c: org.apache.spark.sql.Column) =>
       coalesce(pmod(regexp_extract(c, "/p/([0-9]+)", 1).cast("long"), lit(3)), lit(0)).cast("int")
     val t0 = System.nanoTime()

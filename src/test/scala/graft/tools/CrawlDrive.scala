@@ -23,7 +23,7 @@ object CrawlDrive {
     val dir = java.nio.file.Files.createTempDirectory("crawl-drive").toString
     val settings = CrawlSettings(size = size, nPriorities = 1, hostBudget = 2,
       waveCap = 40, retries = 1, maxWaves = 50, urlPattern = Fixtures.UrlPattern,
-      extract = true, useBloom = true, bloomCapacity = 4096, numBuckets = 8)
+      extract = true, bloomCapacity = 4096, numBuckets = 8)
     val t0 = System.nanoTime()
     val job = new CrawlJob(spark, pages, settings, dir)
     val summary = job.run(Fixtures.seeds(v))

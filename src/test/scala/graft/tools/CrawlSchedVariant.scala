@@ -12,7 +12,7 @@ object CrawlSchedVariant {
       val dir = java.nio.file.Files.createTempDirectory("graft-q-crawl").toString
       val settings = CrawlSettings(size = 40, nPriorities = 1, hostBudget = 6,
         waveCap = 40, retries = 1, maxWaves = 8, urlPattern = Fixtures.UrlPattern,
-        extract = false, useBloom = bloom, bloomCapacity = 4096, numBuckets = 8)
+        extract = false, seenFilter = if (bloom) "bloom" else "none", bloomCapacity = 4096, numBuckets = 8)
       val job = new CrawlJob(spark, pages, settings, dir)
       job.run(Fixtures.seeds(v))
       val n = job.scheduleTable.count()
