@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.FrontierBenchLike
@@ -78,14 +77,6 @@ class PolitenessSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(perHost(Mega) == 2 && perHost(tail(1)) == 1 && perHost(tail(2)) == 8)
     assert(perHost.removedAll(Seq(Mega, tail(1), tail(2))).values.forall(_ <= 4))
-    // a hand-checked case: slow.com keeps its top 2 by (priority, seq)
-    // (seqs 0, 2), free.com the default top 3 (seqs 0, 2, 4)
-    val small = spark.createDataFrame(
-      for (h <- Seq("slow.com", "free.com"); i <- 0 until 10)
-        yield (h, i % 2, i.toLong, s"http://$h/p/$i")
-    ).toDF("host", "priority", "seq", "url_canon")
-    assert(kept(Politeness.hostEligible(small, 3, Some(table("slow.com" -> 2)))) ==
-      Seq(("free.com", 0L), ("free.com", 2L), ("free.com", 4L), ("slow.com", 0L), ("slow.com", 2L)))
   }
 
   test("adaptive branches (no hot host, split, all hot, maxHotHosts = 0) ≡ the reference") {
@@ -112,24 +103,6 @@ class PolitenessSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(kept(tripped) == reference(30, perHost))
       assert(!plan(tripped).contains("LeftAnti"), plan(tripped))
     }
-  }
-
-  test("table broadcast is count-guarded; under the guard the rank keeps WindowGroupLimit") {
-    val budgets = Some(table(Mega -> 2, tail(1) -> 3, tail(2) -> 5))
-    def hasHint(df: DataFrame): Boolean =
-      df.queryExecution.analyzed.collectFirst { case h: ResolvedHint => h }.isDefined
-    // under the bound: hinted, broadcast at runtime, and the literal
-    // ceiling keeps the partial top-k below the window sort
-    val small = Politeness.hostEligible(cands, 4, budgets)
-    assert(hasHint(small), "a bounded table should carry the broadcast hint")
-    small.count()
-    assert(plan(small).contains("BroadcastHashJoin"), plan(small))
-    assert(plan(small).contains("WindowGroupLimit"), plan(small))
-    // over the bound: no hint (Spark obeys one even at OOM size), and the
-    // output is the same
-    val large = Politeness.hostEligible(cands, 4, budgets, maxBroadcastHosts = 1)
-    assert(!hasHint(large), "an over-bound table must not be hint-broadcast")
-    assert(kept(large) == kept(small))
   }
 
   test("no table, salts = 1: the literal window (WindowGroupLimit, no join)") {

@@ -84,6 +84,35 @@ class RobotsCountersSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(caps == Map("slow.com" -> 2, "mid.com" -> 6, "fast.com" -> 8, "glacial.com" -> 1))
   }
 
+  test("hostEligibleCapped: per-host caps bind, absent hosts get the default") {
+    // the caps table feeds the one politeness gate as a per-host budget
+    val cands = spark.createDataFrame(
+      for (h <- Seq("slow.com", "free.com"); i <- 0 until 10)
+        yield (h, i % 2, i.toLong, s"http://$h/p/$i")
+    ).toDF("host", "priority", "seq", "url_canon")
+    val caps = spark.createDataFrame(Seq(("slow.com", 2))).toDF("host", "host_budget")
+    val got = Politeness.hostEligible(cands, 3, Some(caps))
+      .collect().map(r => (r.getAs[String]("host"), r.getAs[Long]("seq"))).toSet
+    // slow.com keeps its top 2 by (priority, seq): seqs 0,2; free.com top 3: 0,2,4
+    assert(got == Set(("slow.com", 0L), ("slow.com", 2L),
+      ("free.com", 0L), ("free.com", 2L), ("free.com", 4L)))
+  }
+
+  test("hostEligibleCapped plan: the literal ceiling keeps WindowGroupLimit (partial top-k)") {
+    // the per-row cap alone would disable the rank pushdown and fully
+    // sort every host; the conjoined literal bound (the default or the
+    // largest cap, whichever is higher) must keep the partial top-k below
+    // the window sort
+    val cands = spark.range(0, 1000).selectExpr(
+      "concat('h', id % 50, '.com') as host",
+      "cast(id % 3 as int) as priority", "id as seq",
+      "concat('http://h', id % 50, '.com/p/', id) as url_canon")
+    val caps = spark.createDataFrame(Seq(("h0.com", 1), ("h1.com", 8))).toDF("host", "host_budget")
+    val plan = Politeness.hostEligible(cands, 3, Some(caps))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("WindowGroupLimit"), s"expected WindowGroupLimit in:\n$plan")
+  }
+
   test("parseSitemapXml: loc required, dotall entries, trim, nullable lastmod/priority") {
     val body =
       """<?xml version="1.0"?><urlset>

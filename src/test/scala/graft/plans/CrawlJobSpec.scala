@@ -176,6 +176,50 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.set("spark.sql.adaptive.enabled", oldAqe)
   }
 
+  test("adaptive skew politeness equals the plain per-host window (J5)") {
+    import graft.operators.Politeness
+    // skewed synthetic frontier: one mega-host + a long tail, multi-priority
+    val cands = FrontierBenchLike.skewed(spark, 4000)
+    val plain = Politeness.hostEligible(cands, 5)
+      .select("host", "priority", "seq").collect().map(_.toSeq).toSet
+    val adaptive = Politeness.hostEligible(cands, 5, salts = 3)
+      .select("host", "priority", "seq").collect().map(_.toSeq).toSet
+    assert(adaptive == plain)
+    // hot-host rows are clipped to the budget, cold hosts pass untouched
+    val perHost = Politeness.hostEligible(cands, 5, salts = 3)
+      .groupBy("host").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(perHost.values.forall(_ <= 5))
+  }
+
+  test("adaptive politeness split path (cold hosts under budget) equals the window") {
+    import graft.operators.Politeness
+    // budget 30: only the mega-host exceeds it (tail hosts carry ~14 rows
+    // at n=1300), so the broadcast split path — not the salted fallback —
+    // is exercised and must still equal the plain window
+    val cands = FrontierBenchLike.skewed(spark, 1300)
+    val plain = Politeness.hostEligible(cands, 30)
+      .select("host", "priority", "seq").collect().map(_.toSeq).toSet
+    val adaptive = Politeness.hostEligible(cands, 30, salts = 3)
+      .select("host", "priority", "seq").collect().map(_.toSeq).toSet
+    assert(adaptive == plain)
+  }
+
+  test("adaptive politeness with every host hot falls back to salted — no broadcast") {
+    import graft.operators.Politeness
+    // hostBudget=1 over the skewed frontier: EVERY host exceeds its
+    // budget (the r2 hazard: the hot-host set as an unbounded broadcast
+    // hint); the bounded decision pass must route to the salted path —
+    // same rows as the window, and no broadcast exchange in the plan
+    val cands = FrontierBenchLike.skewed(spark, 4000)
+    val out = Politeness.hostEligible(cands, 1, salts = 4)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastExchange"),
+      "every-host-hot input must not broadcast the hot-host set")
+    val plain = Politeness.hostEligible(cands, 1)
+      .select("host", "priority", "seq").collect().map(_.toSeq).toSet
+    assert(out.select("host", "priority", "seq").collect().map(_.toSeq).toSet == plain)
+  }
+
   test("schedule with a driver-known input bound skips quotas with identical output") {
     import graft.operators.Politeness
     val cands = FrontierBenchLike.skewed(spark, 1300)
@@ -321,6 +365,67 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = Politeness.adaptiveHostBudgets(m, defaultBudget = 10)
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(out == Map("a" -> 4, "b" -> 1, "c" -> 10, "d" -> 10))
+  }
+
+  test("O7 budget gate: decayed per-host budgets bound the next run's schedule") {
+    import graft.operators.Politeness
+    val sp = spark
+    import sp.implicits._
+    val cands = FrontierBenchLike.skewed(spark, 900)
+    val mega = "http://mega.example.com"
+    val budgets = Seq((mega, 2)).toDF("host", "host_budget")
+    val out = Politeness.hostEligible(cands, 4, Some(budgets))
+      .groupBy("host").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(out(mega) == 2)
+    assert(out.filterNot(_._1 == mega).values.forall(_ <= 4))
+    // matches the fixed-budget window when every budget equals the default
+    val fixed = Politeness.hostEligible(cands, 4)
+      .select("host", "seq").collect().map(_.toSeq).toSet
+    val viaTable = Politeness.hostEligible(cands, 4, Some(budgets.limit(0)))
+      .select("host", "seq").collect().map(_.toSeq).toSet
+    assert(fixed == viaTable)
+    // the scale paths are output-identical to the plain window gate: the
+    // adaptive hot/cold split and the salted rank over every row (under a
+    // tiny maxHotHosts) — a decayed-budgets run keeps the J5 skew treatment
+    val plain = Politeness.hostEligible(cands, 4, Some(budgets))
+      .select("host", "seq").collect().map(_.toSeq).toSet
+    val adaptiveB = Politeness.hostEligible(cands, 4, Some(budgets), salts = 4)
+      .select("host", "seq").collect().map(_.toSeq).toSet
+    assert(adaptiveB == plain, "adaptive hot/cold budget split diverged")
+    val saltedB = Politeness.hostEligible(cands, 4, Some(budgets), salts = 4, maxHotHosts = 0)
+      .select("host", "seq").collect().map(_.toSeq).toSet
+    assert(saltedB == plain, "salted rank (guard tripped) diverged")
+    // column order is preserved (bucketed writes are positional)
+    assert(Politeness.hostEligible(cands, 4, Some(budgets), salts = 4)
+      .columns.toSeq == cands.columns.toSeq)
+  }
+
+  test("O7 budget gate: broadcast hint is count-guarded (VERDICT r3 #2)") {
+    import graft.operators.Politeness
+    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+    val sp = spark
+    import sp.implicits._
+    val cands = FrontierBenchLike.skewed(spark, 300)
+    val budgets = Some(Seq(("http://mega.example.com", 2), ("http://h1.example.com", 3),
+      ("http://h2.example.com", 5)).toDF("host", "host_budget"))
+    def hasHint(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.collectFirst { case h: ResolvedHint => h }.isDefined
+    // under the bound: the hint is present and the runtime plan broadcasts
+    val small = Politeness.hostEligible(cands, 4, budgets)
+    assert(hasHint(small), "bounded budgets table should carry the broadcast hint")
+    small.count()
+    val smallPlan = small.queryExecution.executedPlan.toString
+    assert(smallPlan.contains("BroadcastHashJoin"),
+      s"bounded budgets join did not broadcast:\n$smallPlan")
+    // above the bound: NO hint — Spark obeys hints even at OOM size, so an
+    // unbounded per-host table must reach the planner unhinted (AQE may
+    // still pick broadcast from actual runtime bytes; that is its own
+    // size check, not an obligation)
+    val large = Politeness.hostEligible(cands, 4, budgets, maxBroadcastHosts = 1)
+    assert(!hasHint(large), "over-bound budgets table must not be hint-broadcast")
+    // and the guard changes nothing about the output
+    assert(small.select("host", "seq").collect().map(_.toSeq).toSet ==
+      large.select("host", "seq").collect().map(_.toSeq).toSet)
   }
 
   test("O7 wired end-to-end: run-1 banned windows decay budgets gating run 2 (sim ≡)") {
