@@ -34,13 +34,10 @@ import org.apache.spark.sql.functions._
  * localCheckpoint: the rank frame's lineage stays O(1) across rounds —
  * without it the self-referential loop doubles the logical plan per
  * iteration (the label-propagation OOM, TextDedup.propagateComponents).
+ * Small graphs replay the same update on the driver, under the edge
+ * budget Redirects and TextDedup share ([[SmallGraph.EdgeThreshold]]).
  */
 object LinkGraph {
-
-  /** Default driver-local edge bound shared by the small-graph regimes
-   *  below — the same budget as TextDedup.duplicateClusters' union-find
-   *  (2M × 16-byte edges ≈ 32 MB + transient Row overhead). */
-  val LocalEdgeThreshold: Long = 2000000L
 
   /** PageRank after exactly `iters` rounds of the integer update rule.
    *  Input: an edge list (srcCol: long, dstCol: long); parallel edges
@@ -48,40 +45,78 @@ object LinkGraph {
    *  Output: (node: long, rank: long), one row per node appearing as
    *  src or dst.
    *
-   *  Two regimes, one contract (the duplicateClusters pattern): an edge
-   *  list within `localEdgeThreshold` (exact count off the materialized
-   *  edge frame) replays the identical integer update driver-locally —
-   *  an iterative Spark loop on a small graph pays several
+   *  Two regimes, one contract, chosen by the shared [[SmallGraph]]
+   *  probe: an edge list within `localEdgeThreshold` replays the
+   *  identical integer update driver-locally on the probed rows — an
+   *  iterative Spark loop on a small graph pays several
    *  driver-latency-bound jobs per round (2 joins + an aggregate + an
    *  eager checkpoint) for nothing; larger graphs keep the distributed
    *  loop. The integer arithmetic (floor division, exact sums) is the
    *  same in both regimes, so the output is bit-identical. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, scale: Long = 1000000L, damping: Int = 85,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      localEdgeThreshold: Long = SmallGraph.EdgeThreshold): DataFrame = {
     require(iters >= 0, s"iterations must be non-negative: $iters")
     require(scale > 0, s"scale must be positive: $scale")
     require(damping >= 0 && damping <= 100, s"damping must be in [0,100]: $damping")
     val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).localCheckpoint(true)
-    if (e.count() <= localEdgeThreshold) pageRankLocal(e, iters, scale, damping)
-    else pageRankImpl(e, "src", "dst", iters, scale, damping, materialize = true)
-  }
-
-  /** Driver-local replay of the exact integer PageRank update (see
-   *  [[pageRank]]): bounded by localEdgeThreshold (caller contract). */
-  private def pageRankLocal(e: DataFrame, iters: Int, scale: Long,
-      damping: Int): DataFrame = {
+      col(dstCol).cast("long").as("dst"))
     val spark = e.sparkSession
     import spark.implicits._
-    val edges = e.as[(Long, Long)].collect()
-    val outdeg = new java.util.HashMap[Long, Long]()
+    val base = ((100L - damping) * scale) / 100L
+    val small = SmallGraph.collect(e.as[(Long, Long)], localEdgeThreshold)
+    if (small.isDefined) return pageRankLocal(spark, small.get, iters, scale, damping, base)
+    val (nodes, edgesDeg) = iterationFrames(e.localCheckpoint(true))
+    var ranks = nodes.withColumn("rank", lit(scale)).localCheckpoint(true)
+    var i = 0
+    while (i < iters) {
+      val inflow = edgesDeg
+        .join(ranks.withColumnRenamed("node", "src"), "src")
+        .select(col("dst").as("node"), expr("rank div deg").as("share"))
+        .groupBy("node").agg(sum("share").as("inflow"))
+      // eager checkpoint per round: O(1) lineage (propagateComponents'
+      // plan-doubling lesson); superseded rank blocks age out via LRU
+      ranks = nodes.join(inflow, Seq("node"), "left")
+        .select(col("node"),
+          (lit(base) + expr(s"($damping * coalesce(inflow, 0L)) div 100"))
+            .as("rank"))
+        .localCheckpoint(true)
+      i += 1
+    }
+    ranks
+  }
+
+  /** The distributed loops' iteration-constant frames, each materialized
+   *  once from the (materialized) edge frame: every node once (the rank
+   *  rebuild's left side), and every edge with its source's out-degree,
+   *  partitioned by src — the join key of every round. */
+  private def iterationFrames(e: DataFrame): (DataFrame, DataFrame) = {
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+      .localCheckpoint(true)
+    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+    (nodes, e.join(outdeg, "src").localCheckpoint(true))
+  }
+
+  /** The driver-local replays' counterpart of [[iterationFrames]]: the
+   *  node set in first-appearance order, and each source's out-degree. */
+  private def localFrames(edges: Array[(Long, Long)])
+      : (java.util.LinkedHashSet[Long], java.util.HashMap[Long, Long]) = {
     val nodes = new java.util.LinkedHashSet[Long]()
+    val outdeg = new java.util.HashMap[Long, Long]()
     edges.foreach { case (s, d) =>
       nodes.add(s); nodes.add(d)
       outdeg.merge(s, 1L, (a, b) => a + b)
     }
-    val base = ((100L - damping) * scale) / 100L
+    (nodes, outdeg)
+  }
+
+  /** Driver-local replay of the exact integer PageRank update (see
+   *  [[pageRank]]) over the probed edges. */
+  private def pageRankLocal(spark: SparkSession, edges: Array[(Long, Long)],
+      iters: Int, scale: Long, damping: Int, base: Long): DataFrame = {
+    import spark.implicits._
+    val (nodes, outdeg) = localFrames(edges)
     var rank = new java.util.HashMap[Long, Long]()
     nodes.forEach(n => rank.put(n, scale))
     var i = 0
@@ -99,46 +134,6 @@ object LinkGraph {
     val rows = new scala.collection.mutable.ArrayBuffer[(Long, Long)](rank.size)
     nodes.forEach(n => rows += ((n, rank.get(n))))
     rows.toSeq.toDF("node", "rank")
-  }
-
-  /** `materialize = false` skips the per-round localCheckpoint so probes
-   *  can inspect the composed update plan (BENCH/PLANS.md §14).
-   *  Production callers MUST materialize: the self-referential loop
-   *  otherwise doubles the logical plan per iteration. */
-  private[graft] def pageRankImpl(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, scale: Long, damping: Int, materialize: Boolean): DataFrame = {
-    require(iters >= 0, s"iterations must be non-negative: $iters")
-    require(scale > 0, s"scale must be positive: $scale")
-    require(damping >= 0 && damping <= 100, s"damping must be in [0,100]: $damping")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-    // iteration-constant and consumed every round (the rank rebuild's
-    // left side) — materialize once instead of re-running the distinct
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
-    // iteration-constant: every edge with its source's out-degree,
-    // partitioned by src (the join key of every round) — materialize once
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edgesDeg = e.join(outdeg, "src").localCheckpoint(true)
-    val base = ((100L - damping) * scale) / 100L
-    var ranks = nodes.withColumn("rank", lit(scale)).localCheckpoint(true)
-    var i = 0
-    while (i < iters) {
-      val inflow = edgesDeg
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"), expr("rank div deg").as("share"))
-        .groupBy("node").agg(sum("share").as("inflow"))
-      val next = nodes.join(inflow, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr(s"($damping * coalesce(inflow, 0L)) div 100"))
-            .as("rank"))
-      // eager checkpoint per round: O(1) lineage (propagateComponents'
-      // plan-doubling lesson); superseded rank blocks age out via LRU
-      ranks = if (materialize) next.localCheckpoint(true) else next
-      i += 1
-    }
-    ranks
   }
 
   /** Anchor-text corpus: per link TARGET, aggregate what the web calls
@@ -215,27 +210,23 @@ object LinkGraph {
    *  Scale (10^8-host graph): same shape as [[pageRank]] — the
    *  edges⋈outdeg frame is iteration-constant and materialized once,
    *  inflow partial-aggregates map-side before its one exchange, and
-   *  the per-round localCheckpoint keeps lineage O(1). `n * scale` and
-   *  `iters * n * scale` must fit a long (guarded). */
+   *  the per-round localCheckpoint keeps lineage O(1); a small graph
+   *  (the [[SmallGraph]] probe) replays the identical integer update
+   *  driver-locally instead of paying 2 joins + an aggregate + a
+   *  checkpoint + a 1-row conservation action per round. `n * scale`
+   *  and `iters * n * scale` must fit a long (guarded). */
   def opic(edges: DataFrame, srcCol: String, dstCol: String, iters: Int,
       scale: Long = 1000000L,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      localEdgeThreshold: Long = SmallGraph.EdgeThreshold): DataFrame = {
     require(iters >= 0, s"iterations must be non-negative: $iters")
     require(scale > 0, s"scale must be positive: $scale")
     val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).localCheckpoint(true)
-    // small-graph regime (the duplicateClusters/pageRank pattern): the
-    // synchronous cash/history update over a bounded edge list replays
-    // driver-locally with the identical integer arithmetic — the
-    // distributed loop pays 2 joins + an aggregate + a checkpoint + a
-    // 1-row conservation action PER ROUND, all driver-latency-bound on a
-    // small graph. Output is bit-identical in both regimes.
-    if (e.count() <= localEdgeThreshold) return opicLocal(e, iters, scale)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edgesDeg = e.join(outdeg, "src").localCheckpoint(true)
+      col(dstCol).cast("long").as("dst"))
+    val spark = e.sparkSession
+    import spark.implicits._
+    val small = SmallGraph.collect(e.as[(Long, Long)], localEdgeThreshold)
+    if (small.isDefined) return opicLocal(spark, small.get, iters, scale)
+    val (nodes, edgesDeg) = iterationFrames(e.localCheckpoint(true))
     val n = nodes.count() // one bounded driver scalar (the node count)
     if (n == 0)
       return nodes.select(col("node"), lit(0L).as("cash"), lit(0L).as("hist"))
@@ -270,18 +261,12 @@ object LinkGraph {
     ranks
   }
 
-  /** Driver-local replay of the exact integer OPIC update (see [[opic]]):
-   *  bounded by localEdgeThreshold (caller contract). */
-  private def opicLocal(e: DataFrame, iters: Int, scale: Long): DataFrame = {
-    val spark = e.sparkSession
+  /** Driver-local replay of the exact integer OPIC update (see [[opic]])
+   *  over the probed edges. */
+  private def opicLocal(spark: SparkSession, edges: Array[(Long, Long)],
+      iters: Int, scale: Long): DataFrame = {
     import spark.implicits._
-    val edges = e.as[(Long, Long)].collect()
-    val outdeg = new java.util.HashMap[Long, Long]()
-    val nodes = new java.util.LinkedHashSet[Long]()
-    edges.foreach { case (s, d) =>
-      nodes.add(s); nodes.add(d)
-      outdeg.merge(s, 1L, (a, b) => a + b)
-    }
+    val (nodes, outdeg) = localFrames(edges)
     val n = nodes.size.toLong
     if (n == 0)
       return Seq.empty[(Long, Long, Long)].toDF("node", "cash", "hist")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -45,25 +45,20 @@ object Redirects {
   /** Resolve every redirecting URL. Input: (srcCol, dstCol) — one row
    *  per redirect. Output: (src, target, hops, is_cycle) — `target` is
    *  the terminal URL (or the 2^rounds-capped pointer when `is_cycle`),
-   *  `hops` the number of redirects followed. */
-  /** Default driver-local edge bound (the duplicateClusters pattern). */
-  val LocalEdgeThreshold: Long = 2000000L
-
+   *  `hops` the number of redirects followed. A small redirect map (the
+   *  [[SmallGraph]] probe) replays the doubling horizon driver-locally
+   *  instead of paying a self-join + an eager checkpoint + a 1-row stop
+   *  probe per round; the output is identical in both regimes. */
   def resolve(edges: DataFrame, srcCol: String, dstCol: String,
-      maxHops: Int = 32, localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      maxHops: Int = 32, localEdgeThreshold: Long = SmallGraph.EdgeThreshold): DataFrame = {
     require(maxHops >= 1, s"maxHops must be at least 1: $maxHops")
-    val base = edges.select(col(srcCol).cast("string").as("src"),
+    val pairs = edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("target"))
-      .withColumn("hops", lit(1L))
-      .localCheckpoint(true)
-    // small-graph regime (the duplicateClusters/pageRank pattern): a
-    // bounded redirect map replays the doubling horizon driver-locally —
-    // each distributed round costs a self-join + an eager checkpoint + a
-    // 1-row stop probe, all driver-latency-bound on a small edge set.
-    // The walk follows each chain for at most 2^rounds hops, exactly the
-    // pointer state the doubling reaches, so the output (target, hops,
-    // is_cycle) is identical in both regimes.
-    if (base.count() <= localEdgeThreshold) return resolveLocal(base, maxHops)
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val small = SmallGraph.collect(pairs.as[(String, String)], localEdgeThreshold)
+    if (small.isDefined) return resolveLocal(spark, small.get, maxHops)
+    val base = pairs.withColumn("hops", lit(1L)).localCheckpoint(true)
     var state = base
     var i = 0
     val rounds = roundsFor(maxHops)
@@ -93,15 +88,14 @@ object Redirects {
         coalesce(col("__c"), lit(false)).as("is_cycle"))
   }
 
-  /** Driver-local replay of the doubling horizon (see [[resolve]]):
-   *  bounded by localEdgeThreshold (caller contract). The horizon is
+  /** Driver-local replay of the doubling horizon (see [[resolve]]) over
+   *  the probed rows: each chain is walked for at most
    *  2^roundsFor(maxHops) hops — the exact pointer state the distributed
    *  doubling reaches, early-stop included (stopping early only happens
    *  when every chain already terminated, where walk and doubling agree). */
-  private def resolveLocal(base: DataFrame, maxHops: Int): DataFrame = {
-    val spark = base.sparkSession
+  private def resolveLocal(spark: SparkSession, rows: Array[(String, String)],
+      maxHops: Int): DataFrame = {
     import spark.implicits._
-    val rows = base.select(col("src"), col("target")).as[(String, String)].collect()
     val next = new java.util.HashMap[String, String](rows.length * 2)
     rows.foreach { case (s, d) => next.put(s, d) }
     val cap = 1L << roundsFor(maxHops)

@@ -64,8 +64,11 @@ object TextDedup {
    *  per-doc-distinct (document frequency caps, set sizes via
    *  `collect_list`) need [[shingleHashes]]. */
   def shingleHashesRaw(df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame = {
+    val split0 = split(trim(col(textCol)), "\\s+")
+    // k = 1: drop the empty word of empty or whitespace-only text, a
+    // shingle `shingles` drops too (at k >= 2 the plan is unchanged)
     val words = df.select(col(idCol).as("id"),
-        split(trim(col(textCol)), "\\s+").as("w"))
+        (if (k == 1) filter(split0, w => length(w) > 0) else split0).as("w"))
       .filter(size(col("w")) >= k) // sequence(0, negative) would descend
     val args = (0 until k).map(j => s"element_at(w, i + ${j + 1})").mkString(", ")
     words.select(col("id"), explode(
@@ -366,14 +369,15 @@ object TextDedup {
    *
    * Two regimes, one contract (ids are 64-bit):
    *
-   *  - **small graphs** (symmetrized edge count ≤ `localEdgeThreshold`,
-   *    default 2M ≈ 1M pairs, bounded ~32 MB of longs + transient Row
-   *    overhead): driver union-find with path compression, always
-   *    attaching the larger root under the smaller so the root IS the
-   *    min id. An iterative Spark loop on a 100-row graph pays several
-   *    driver-latency-bound jobs per round for nothing; near-dup pair
-   *    sets are tiny relative to the corpus (duplication rate × docs),
-   *    so this is the common case even at large SF.
+   *  - **small graphs** (symmetrized edge count within
+   *    `localEdgeThreshold`, decided and fetched by the shared
+   *    [[SmallGraph]] probe; default 2M ≈ 1M pairs): driver union-find
+   *    with path compression, always attaching the larger root under
+   *    the smaller so the root IS the min id. An iterative Spark loop
+   *    on a 100-row graph pays several driver-latency-bound jobs per
+   *    round for nothing; near-dup pair sets are tiny relative to the
+   *    corpus (duplication rate × docs), so this is the common case
+   *    even at large SF.
    *
    *  - **large graphs**: deterministic distributed min-label
    *    propagation — every node starts labeled with itself; each round
@@ -388,7 +392,7 @@ object TextDedup {
    *    al., MR Connected Components) if such inputs ever matter).
    */
   def duplicateClusters(pairs: DataFrame, maxIters: Int = 20,
-      localEdgeThreshold: Long = 2000000L): DataFrame = {
+      localEdgeThreshold: Long = SmallGraph.EdgeThreshold): DataFrame = {
     // symmetrize in ONE pass over the (possibly expensive) pair plan —
     // a two-branch union would evaluate the upstream pair detection twice
     val edges = pairs.select(explode(array(
@@ -396,23 +400,11 @@ object TextDedup {
         struct(col("b").cast("long").as("a"), col("a").cast("long").as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .distinct()
-    // size gate AND edge fetch in ONE short-circuiting job (r6): the old
-    // persist + count + collect sequence paid a full evaluation to learn
-    // the size, then read the cache again to fetch the rows the local
-    // regime needed anyway. limit(threshold+1) bounds driver memory the
-    // same way the count gate did; only a genuinely large graph pays a
-    // second evaluation (and then persists for the iteration loop).
     val spark = edges.sparkSession
     import spark.implicits._
-    val probe = edges.as[(Long, Long)]
-      .limit((localEdgeThreshold + 1).min(Int.MaxValue.toLong).toInt).collect()
-    if (probe.length <= localEdgeThreshold) localComponents(spark, probe)
-    else {
-      val e = edges.persist()
-      e.count()
-      val out = propagateComponents(e, maxIters)
-      e.unpersist()
-      out
+    SmallGraph.collect(edges.as[(Long, Long)], localEdgeThreshold) match {
+      case Some(local) => localComponents(spark, local)
+      case None => propagateComponents(edges.localCheckpoint(true), maxIters)
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -28,6 +29,34 @@ class LinkGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def ranksMap(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Spark jobs started while `f` runs, counted by a listener. A marker
+   *  job afterwards flushes the listener bus, which delivers in order. */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val counted = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("counted") => counted.incrementAndGet()
+          case Some("marker") => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("counted", "jobs under test")
+      f
+      sc.setJobGroup("marker", "listener bus flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      counted.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   /** Exact sequential replay of the integer update rule. */
   private def bruteRank(es: Seq[(Long, Long)], iters: Int,
@@ -246,6 +275,27 @@ class LinkGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dist = ranksMap(LinkGraph.pageRank(edgesDF(es), "src", "dst", iters = 4,
       localEdgeThreshold = 0L))
     assert(local == dist)
+    // the empty edge list, in both regimes (-1 forces the distributed one)
+    Seq(SmallGraph.EdgeThreshold, -1L).foreach { t =>
+      assert(ranksMap(LinkGraph.pageRank(edgesDF(Seq.empty), "src", "dst", iters = 4,
+        localEdgeThreshold = t)).isEmpty, s"threshold $t")
+    }
+  }
+
+  test("pageRank's driver-local regime runs only the probe's Spark jobs") {
+    // 40 persisted edges over 4 partitions (the shape of a cached edge
+    // frame, whose row count the optimizer does not know): the limit
+    // probe scans the first partition, then the other three
+    // (spark.sql.limit.scaleUpFactor 4), and the replay runs no job —
+    // no checkpoint, no count()
+    val e = spark.range(0, 40, 1, 4)
+      .select(col("id").as("src"), ((col("id") * 7 + 3) % 40).as("dst")).persist()
+    e.count()
+    var ranks = Map.empty[Long, Long]
+    val jobs = jobsOf { ranks = ranksMap(LinkGraph.pageRank(e, "src", "dst", iters = 3)) }
+    e.unpersist()
+    assert(jobs == 2)
+    assert(ranks == bruteRank((0L until 40L).map(i => (i, (i * 7 + 3) % 40)), 3))
   }
 
   test("opic regimes agree: driver-local ≡ distributed on an LCG graph") {
@@ -260,5 +310,10 @@ class LinkGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dist = m(LinkGraph.opic(edgesDF(es), "src", "dst", iters = 5,
       localEdgeThreshold = 0L))
     assert(local == dist)
+    // the empty edge list, in both regimes (-1 forces the distributed one)
+    Seq(SmallGraph.EdgeThreshold, -1L).foreach { t =>
+      assert(m(LinkGraph.opic(edgesDF(Seq.empty), "src", "dst", iters = 5,
+        localEdgeThreshold = t)).isEmpty, s"threshold $t")
+    }
   }
 }

@@ -110,5 +110,10 @@ class RedirectsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dist = resolvedMap(Redirects.resolve(edgesDF(es), "src", "dst",
       localEdgeThreshold = 0L))
     assert(local === dist)
+    // the empty edge list, in both regimes (-1 forces the distributed one)
+    Seq(SmallGraph.EdgeThreshold, -1L).foreach { t =>
+      assert(resolvedMap(Redirects.resolve(edgesDF(Seq.empty), "src", "dst",
+        localEdgeThreshold = t)).isEmpty, s"threshold $t")
+    }
   }
 }

@@ -494,6 +494,21 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(TextDedup.hotOnlyDocCount(sh2, 32) == 1L)
   }
 
+  test("k=1 hashed shingles match string shingles on empty and whitespace-only docs") {
+    val sp = spark
+    import sp.implicits._
+    // "\t x": trim leaves the tab, so the split starts with an empty word
+    val docs = Seq((1L, ""), (2L, "   "), (3L, "a b a"), (4L, "\t x"), (5L, " one ")).toDF("id", "text")
+    def perId(df: DataFrame): Map[Long, Long] =
+      df.groupBy("id").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val strings = perId(TextDedup.shingles(docs, "text", "id", 1))
+    assert(strings == Map(3L -> 2L, 4L -> 1L, 5L -> 1L))
+    assert(perId(TextDedup.shingleHashes(docs, "text", "id", 1)) == strings)
+    // at k >= 2 an empty word sits inside a longer shingle, which both forms keep
+    assert(perId(TextDedup.shingleHashes(docs, "text", "id", 2)) ==
+      perId(TextDedup.shingles(docs, "text", "id", 2)))
+  }
+
   test("jaccardForPairs tolerates duplicate candidate pairs (internal dedup)") {
     val sp = spark
     import sp.implicits._
@@ -563,6 +578,12 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dist = TextDedup.duplicateClusters(pairs, localEdgeThreshold = -1L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == expected)
+    // the empty pair list, in both regimes
+    val none = Seq.empty[(Long, Long)].toDF("a", "b")
+    Seq(SmallGraph.EdgeThreshold, -1L).foreach { t =>
+      assert(TextDedup.duplicateClusters(none, localEdgeThreshold = t).collect().isEmpty,
+        s"threshold $t")
+    }
   }
 
   test("duplicateClusters: regimes agree on a 600-edge LCG graph (property)") {
