@@ -119,7 +119,7 @@ object FrontierBench {
     val b = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", (cores * 2).toString)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       // NOTE: spark.memory.offHeap was measured here and REJECTED for the
@@ -155,9 +155,7 @@ object FrontierBench {
       samples.size, samples)
   }
 
-  /** Child mode: measure one config in this JVM, print a marker line.
-   *  SPARK_GRAFT_SEEN=mem switches to the round-1-style in-memory seen
-   *  (diagnostic comparison only; the shipped path is the table). */
+  /** Child mode: measure one config in this JVM, print a marker line. */
   private def childMain(cores: Int, n: Long, reps: Int, warmups: Int): Unit = {
     val spark = session(cores)
     spark.sparkContext.setLogLevel("ERROR")
@@ -168,11 +166,7 @@ object FrontierBench {
     try {
       // seen state read the way the engine stores it: bucketed table,
       // built in state prep, not in the timed wave
-      val seen =
-        if (sys.env.get("SPARK_GRAFT_SEEN").contains("mem")) {
-          val s = seenState(spark, n).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          s.count(); s
-        } else seenStateTable(spark, n, dir.toString)
+      val seen = seenStateTable(spark, n, dir.toString)
       // bloom pre-filter state: maintained with the seen set (D2/D3), so
       // built in state prep, not in the timed wave
       val store = Some(seenBloomStore(spark, n, dir.toString))
@@ -238,9 +232,8 @@ object FrontierBench {
       else Seq.empty
     // throughput-batch default: ParallelGC measures ~15% faster than G1 on
     // this allocation-heavy wave (probed at both 8 and 32 cores)
-    val gc = Seq(s"-XX:+Use${sys.env.getOrElse("SPARK_GRAFT_GC", "Parallel")}GC")
     val cmd = pin ++ Seq(javaBin, s"-Xmx$heap", s"-Xms$heap",
-      s"-XX:ActiveProcessorCount=$cores") ++ gc ++ jvmArgs ++ Seq(
+      s"-XX:ActiveProcessorCount=$cores", "-XX:+UseParallelGC") ++ jvmArgs ++ Seq(
       "-cp", System.getProperty("java.class.path"),
       "graft.FrontierBench", "--wave", cores.toString, n.toString, reps.toString, warmups.toString)
     val outFile = java.nio.file.Files.createTempFile("graft-bench-child", ".out")

@@ -27,9 +27,10 @@ import org.apache.spark.sql.types.StructType
  *    manifest's `fetched` key names the views it serves); `dead` (waves
  *    with errors only); and the opt-in `host_metrics` and `error_inc`
  *    (bundle mode). The manifest itself carries the wave's A7 metrics
- *    (`m.*`) and its per-partition lineage counts (`lineage.<stage>`,
- *    `partition:rows` pairs) — driver-known values that need no parquet
- *    job;
+ *    (`m.*`), its per-partition lineage counts (`lineage.<stage>`,
+ *    `partition:rows` pairs) and its per-phase Spark work
+ *    (`m.phase.<phase>.<stat>`, see [[PhaseStats]]) — driver-known values
+ *    that need no parquet job;
  *  - the two tables that sit on a join's BIG side every wave — `seen`
  *    and `frontier` — are catalog tables at `<dir>/<name>`,
  *    PARTITIONED BY (wave) and CLUSTERED/SORTED BY (url_hash, url_canon)

@@ -50,6 +50,13 @@ import graft.operators.{Dedup, ParserDispatch, ParserRule, Politeness}
  *                    urls.py:62-73): first match dispatches, no match
  *                    drops the URL; see [[graft.operators.ParserDispatch]]
  * @param salts       politeness salting shards for mega-hosts (J5)
+ * @param numBuckets  storage buckets of the seen and frontier tables, and
+ *                    the shuffle width of every wave: for the whole of
+ *                    `run()`, `spark.sql.shuffle.partitions` is pinned to
+ *                    it and adaptive query execution is off (both are
+ *                    restored when `run()` returns or throws). Both are
+ *                    session settings, so any other query in the same
+ *                    session during the run sees them too
  * @param seenFilter  per-bucket seen pre-filter in front of the exact
  *                    anti-join (D2) — output provably identical with any
  *                    value: "none", "bloom" (reference-sized Bloom) or
@@ -134,6 +141,12 @@ object CrawlJob {
           val t = new Thread(r, "graft-wave-write"); t.setDaemon(true); t
         }))
 
+  /** Runs `body` on the wave-write pool with its jobs charged to `phase`:
+   *  pool threads do not inherit the wave thread's tag. */
+  private def tailWrite(stats: PhaseStats, phase: String)(body: => Unit)
+      : scala.concurrent.Future[Unit] =
+    scala.concurrent.Future { stats.tag(phase); body }(waveWriteEc)
+
   /** Row count of every partition, in one job. */
   private[plans] def partitionCounts(rdd: org.apache.spark.rdd.RDD[_]): Array[Long] =
     rdd.mapPartitions { it =>
@@ -215,9 +228,13 @@ class CrawlJob(
 
   /** Crash-point hook for resume tests: called with (wave, step) right
    *  after each of a wave's checkpoint writes — "fetched", "seen", "dead",
-   *  "bloom", "frontier" — and with "manifest" just before the commit.
+   *  "bloom", "frontier" — and with "manifest" just before the commit
+   *  (the seed wave's too), once the wave's telemetry is taken.
    *  A hook that throws ends the run there, as a killed driver would. */
   private[plans] var afterWrite: (Int, String) => Unit = (_, _) => ()
+
+  /** The phase listener of the latest `run()`, detached once it ended. */
+  private[plans] var phaseStats: PhaseStats = _
 
   /** P2 rule table; `urlPattern` alone ≙ one catch-all `extract` parser. */
   private val parserRules: Seq[ParserRule] =
@@ -318,7 +335,7 @@ class CrawlJob(
 
   /** Wave 0: admit the seed list (S1; dedup-at-discovery D1/D6 — seeds are
    *  anti-joined like any wave, mq.exist at cola/job/task.py:114-118). */
-  private def admitSeeds(seeds: Seq[String]): Unit = {
+  private def admitSeeds(seeds: Seq[String], stats: PhaseStats): Unit = {
     val raw = seeds.zipWithIndex.toDF("url", "__idx")
       .filter(length(trim(col("url"))) > 0) // P4 blank drop (store.py:249-250)
       .filter(ParserDispatch.accepts(col("url"), parserRules)) // P1/P2
@@ -339,7 +356,10 @@ class CrawlJob(
     ckpt.writeBucketed(withSeq, 0, "frontier")
     ckpt.writeBucketed(withSeq.select(col("url_hash"), col("url_canon")), 0, "seen")
     releaseWave(Seq(withSeq))
-    ckpt.commit(0, Map("applied" -> "0", "finished" -> "0", "scheduledTotal" -> "0", "deadTotal" -> "0"))
+    val telemetry = PhaseStats.manifestEntries(stats.take(0, Seq("seed")))
+    afterWrite(0, "manifest")
+    ckpt.commit(0, telemetry ++
+      Map("applied" -> "0", "finished" -> "0", "scheduledTotal" -> "0", "deadTotal" -> "0"))
   }
 
   /** Register the bucketed state tables in this session's catalog —
@@ -372,8 +392,21 @@ class CrawlJob(
    *  (settings.numBuckets, cluster-sized in production), so this scales
    *  with the deployment, not with this host. Every wave output is
    *  partition-independent by construction (dense-seq ranks, hash
-   *  aggregates, windows — spec-pinned), so only job latency changes. */
+   *  aggregates, windows — spec-pinned), so only job latency changes.
+   *
+   *  Each committed wave's manifest also records where the wave's work
+   *  went: a [[PhaseStats]] listener, attached for the run, charges every
+   *  Spark job to its wave phase — `seed` (wave 0), then `schedule`,
+   *  `fetch`, `discover` and `commit` — and the manifest carries
+   *  `m.phase.<phase>.<stat>` for each (see [[telemetryTable]]). Work
+   *  between two commits that commits nothing (the run's start-up reads,
+   *  an idle wave) counts toward the next committed wave. */
   def run(seeds: Seq[String]): CrawlSummary = {
+    val sc = spark.sparkContext
+    val stats = new PhaseStats(sc)
+    phaseStats = stats
+    val prevTag = sc.getLocalProperty(PhaseStats.Key)
+    sc.addSparkListener(stats)
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.shuffle.partitions", settings.numBuckets.toString)
@@ -384,18 +417,24 @@ class CrawlJob(
     // chain of separate jobs (measured: 147 → 65 jobs per 4-wave run,
     // ~15% wall on the driver-latency-bound path)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try runImpl(seeds)
+    try runImpl(seeds, stats)
     finally {
+      sc.removeSparkListener(stats)
+      sc.setLocalProperty(PhaseStats.Key, prevTag)
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
 
-  private def runImpl(seeds: Seq[String]): CrawlSummary = {
+  private def runImpl(seeds: Seq[String], stats: PhaseStats): CrawlSummary = {
     ckpt.cleanUncommitted()
+    val fresh = ckpt.latestWave.isEmpty
+    stats.enter(if (fresh) "seed" else "schedule")
     ensureStateTables()
-    val resumedWave = ckpt.latestWave
-    if (resumedWave.isEmpty) admitSeeds(seeds)
+    if (fresh) {
+      admitSeeds(seeds, stats)
+      stats.enter("schedule")
+    }
     var wave = ckpt.latestWave.get
     var state = ckpt.manifest(wave)
     var applied = state("applied").toLong
@@ -441,6 +480,7 @@ class CrawlJob(
     while (frontierSize > 0 && wave < settings.maxWaves &&
            (settings.size < 0 || finished < settings.size)) {
       val w = wave + 1
+      stats.enter("schedule")
       val t0 = System.nanoTime()
       val grant =
         if (settings.size < 0) settings.waveCap
@@ -493,10 +533,11 @@ class CrawlJob(
         // the collected rank offsets — independent of everything after it,
         // so its write job overlaps the fetch/extract pass instead of
         // serializing behind it (awaited with the wave tail before commit)
-        val fSchedule = scala.concurrent.Future {
+        val fSchedule = CrawlJob.tailWrite(stats, "schedule") {
           ckpt.write(scheduleTable, w, "schedule")
-        }(CrawlJob.waveWriteEc)
+        }
 
+        stats.enter("fetch")
         // ---- "fetch" = join pages (J6/S2: html column IS the fetch result),
         //      then ONE pass over html computes extraction + outlinks + the
         //      fetch status together. Only that slim projection is persisted
@@ -648,6 +689,7 @@ class CrawlJob(
         counters.add("budget", "finishes", nSuccess)
         counters.add("budget", "errors", nErrors)
 
+        stats.enter("discover")
         // ---- outlinks (F1) → new candidates: P1/P2 rule filter, P6 resolve
         //      (inside extractOutlinks), P7 self-drop, P8 canonicalize ----
         val outlinks = success.select(
@@ -809,6 +851,7 @@ class CrawlJob(
         }
 
         // ---- per-wave outputs + atomic commit (S6) ----
+        stats.enter("commit")
         // seen delta = new frontier urls ∪ fresh bundle labels (both gate
         // future discoveries; labels must also reach the blooms or the
         // "definitely new" shortcut would readmit a seen label)
@@ -867,32 +910,32 @@ class CrawlJob(
         // is LAZY — the version each live plan captured survives this
         // wave on disk and is pruned only by a LATER wave's delta (see
         // BloomStore.mergeAndWrite).
-        val fFrontier = scala.concurrent.Future {
+        val fFrontier = CrawlJob.tailWrite(stats, "commit") {
           ckpt.writeBucketed(frontierOut, w, "frontier")
           afterWrite(w, "frontier")
-        }(CrawlJob.waveWriteEc)
-        val fBloom = scala.concurrent.Future {
+        }
+        val fBloom = CrawlJob.tailWrite(stats, "commit") {
           if (nNew + nLabels > 0) bloomStore.foreach { st =>
             st.writeDelta(seenDelta, w)
             afterWrite(w, "bloom")
           }
-        }(CrawlJob.waveWriteEc)
+        }
         val fDead =
           if (nErrors > 0 && settings.bundles.isEmpty)
-            Seq(scala.concurrent.Future(writeDead())(CrawlJob.waveWriteEc))
+            Seq(CrawlJob.tailWrite(stats, "commit")(writeDead()))
           else Seq.empty
         // O7 evidence (opt-in): per-(wave, host) fetch outcomes — the
         // banned-window input adaptiveHostBudgets decays budgets from.
         // Reads only the cached `processed` frame; host cardinality bounds
         // the output (tiny next to the wave)
         val fHostMetrics =
-          if (settings.hostMetrics) Seq(scala.concurrent.Future {
+          if (settings.hostMetrics) Seq(CrawlJob.tailWrite(stats, "commit") {
             ckpt.write(processed.groupBy(col("host")).agg(
                 sum(when(col("ok"), 1L).otherwise(0L)).as("fetched"),
                 sum(when(col("ok"), 0L).otherwise(1L)).as("errors"))
               .select(lit(w).as("wave"), col("host"), col("fetched"), col("errors")),
               w, "host_metrics")
-          }(CrawlJob.waveWriteEc))
+          })
           else Seq.empty
         val tailWrites = fHostMetrics ++ fDead ++ Seq(fSchedule, fBloom, fFrontier)
         tailWrites
@@ -907,15 +950,17 @@ class CrawlJob(
           .persist(StorageLevel.MEMORY_AND_DISK)
         frontierSize = nextSizeBase + nIncSeeded
         val secs = (System.nanoTime() - t0) / 1e9
-        // A7 wave metrics and the per-partition lineage counts are
-        // driver-known — they ride the manifest (no parquet job);
-        // metricsTable / lineageTable reconstruct them from manifests
+        // A7 wave metrics, the per-partition lineage counts and the phase
+        // telemetry are driver-known — they ride the manifest (no parquet
+        // job); metricsTable / lineageTable / telemetryTable reconstruct
+        // them from manifests
         val lineage = CrawlJob.LineageStages
           .zip(Seq(candidateCounts, admittedCounts, scheduledCounts))
           .map { case (stage, counts) => s"lineage.$stage" -> CrawlJob.encodeLineage(counts) }
         val views = if (fetchedViews.isEmpty) Nil else Seq("fetched" -> fetchedViews.mkString(","))
+        val telemetry = PhaseStats.manifestEntries(stats.take(w, PhaseStats.WavePhases))
         afterWrite(w, "manifest")
-        ckpt.commit(w, (lineage ++ views).toMap ++ Map(
+        ckpt.commit(w, (lineage ++ views).toMap ++ telemetry ++ Map(
           "applied" -> applied.toString, "finished" -> finished.toString,
           "scheduledTotal" -> scheduledTotal.toString, "deadTotal" -> deadTotal.toString,
           "incPassesUsed" -> (settings.incPasses - incPassesLeft).toString,
@@ -1039,6 +1084,12 @@ class CrawlJob(
     }
     rows.toDF()
   }
+
+  /** Per-phase Spark work and wall time ([[PhaseTelemetry]] rows) of every
+   *  committed wave, the seed wave included, reconstructed from the wave
+   *  manifests: one row per (wave, phase). */
+  def telemetryTable: DataFrame =
+    ckpt.committedWaves.sorted.flatMap(w => PhaseStats.fromManifest(w, ckpt.manifest(w))).toDF()
 
   /** Committed waves whose fetched table serves `view` ("inc" and/or
    *  "results", as the wave's settings had them — manifest-recorded). */

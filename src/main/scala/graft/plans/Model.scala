@@ -53,6 +53,12 @@ case class WaveMetrics(wave: Int, scheduled: Long, fetched: Long, errors: Long,
     new_urls: Long, deduped: Long, frontier_size: Long,
     applied: Long, finished: Long, secs: Double)
 
+/** Spark work and wall time of one phase of one wave (see [[PhaseStats]]):
+ *  jobs, stages and tasks run, Σ job seconds, wall seconds on the wave
+ *  thread, shuffle bytes written and bytes spilled (memory + disk). */
+case class PhaseTelemetry(wave: Int, phase: String, jobs: Long, stages: Long, tasks: Long,
+    job_s: Double, wall_s: Double, shuffle_write_bytes: Long, spill_bytes: Long)
+
 /** Extraction result row (S4 result sink, a projection of the wave's
  *  fetched table); parser_id = the P2 rule that handled the page. */
 case class PageResult(wave: Int, url_canon: String, parser_id: String,

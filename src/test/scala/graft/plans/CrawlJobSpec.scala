@@ -161,6 +161,83 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertLineageMatchesWaves(fullRun._1)
     assertLineageMatchesWaves(resumedRun)
     assert(lineageSums(resumedRun) == lineageSums(fullRun._1))
+    // phase telemetry across the resume: one row per (committed wave,
+    // phase) — none missing, none written twice by the two runs
+    val telemetry = resumedRun.telemetryTable.select("wave", "phase").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq
+    val waves = resumedRun.metricsTable.select("wave").collect().map(_.getInt(0)).sorted.toSeq
+    assert(waves == (1 to fullRun._2.wavesRun))
+    assert(telemetry.sorted ==
+      ((0, "seed") +: waves.flatMap(w => PhaseStats.WavePhases.map(w -> _))).sorted)
+  }
+
+  test("wave telemetry: m.phase.* keys for every committed wave, jobs equal a listener's, all tagged; detached after run") {
+    // every job start, with the phase tag of the thread that submitted it
+    val seenJobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val probe = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seenJobs.add(Option(e.properties).flatMap(p => Option(p.getProperty(PhaseStats.Key))))
+    }
+    val sc = spark.sparkContext
+    def drained(): Seq[Option[String]] = {
+      org.apache.spark.sql.graftbridge.ListenerBusBridge.drain(sc, 10000L)
+      seenJobs.asScala.toSeq
+    }
+    // a job tagged as the finished run's must change none of its counters
+    def assertDetached(job: CrawlJob): Unit = {
+      val stats = job.phaseStats
+      stats.take(0, Nil)
+      stats.tag("commit")
+      try spark.range(0, 100, 1, 4).count() finally sc.setLocalProperty(PhaseStats.Key, null)
+      assert(stats.take(0, Nil).forall(r => r.jobs == 0 && r.stages == 0 && r.tasks == 0),
+        "the phase listener still counts after run")
+    }
+    sc.addSparkListener(probe)
+    val dir = tmpDir("telemetry")
+    // (wave, first job index, end job index) of the jobs before each
+    // wave's commit, since the previous commit or the start of the run
+    val windows = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
+    final class Crash extends RuntimeException
+    def hooked(crashAt: Int): CrawlJob = {
+      val job = new CrawlJob(spark, pagesDF, base, dir)
+      var from = drained().size
+      job.afterWrite = (w, step) => if (step == "manifest") {
+        val to = seenJobs.size // the engine drained the bus before this hook
+        windows += ((w, from, to)); from = to
+        if (w == crashAt) throw new Crash
+      }
+      job
+    }
+    try {
+      val crashed = hooked(crashAt = 2)
+      intercept[Crash](crashed.run(Fixtures.seeds(V)))
+      assertDetached(crashed)
+      windows.remove(windows.size - 1) // wave 2 died before its commit
+      val resumed = hooked(crashAt = -1)
+      val summary = resumed.run(Fixtures.seeds(V))
+      assertDetached(resumed)
+      assert(scheduleTuples(resumed) == scheduleTuples(fullRun._1))
+
+      val jobs = drained()
+      val ckpt = new Checkpoint(spark, dir, base.numBuckets)
+      assert(ckpt.committedWaves.sorted == (0 to summary.wavesRun))
+      assert(windows.map(_._1) == (0 to summary.wavesRun))
+      windows.foreach { case (w, from, to) =>
+        val m = ckpt.manifest(w)
+        val phases = if (w == 0) Seq("seed") else PhaseStats.WavePhases
+        for (p <- phases; s <- PhaseStats.Stats)
+          assert(m.get(s"m.phase.$p.$s").exists(_.toDouble >= 0), s"wave $w: m.phase.$p.$s")
+        val rows = PhaseStats.fromManifest(w, m)
+        assert(rows.map(_.phase).sorted == phases.sorted, s"wave $w phases")
+        assert(rows.forall(r => r.jobs > 0 && r.tasks > 0 && r.wall_s > 0), s"wave $w: $rows")
+        val tags = jobs.slice(from, to)
+        assert(tags.forall(_.isDefined), s"wave $w ran an untagged job")
+        assert(rows.map(_.jobs).sum == tags.size, s"wave $w: Σ phase jobs ≠ the listener's")
+        val byPhase = tags.flatten.groupBy(_.split(':').last).map { case (p, ts) => p -> ts.size.toLong }
+        assert(byPhase == rows.map(r => r.phase -> r.jobs).toMap, s"wave $w: jobs per phase")
+      }
+      assert(resumed.telemetryTable.count() == 1 + 4L * summary.wavesRun)
+    } finally sc.removeSparkListener(probe)
   }
 
   test("planBroadcasts: the relations a plan broadcast once it ran, with and without AQE") {
@@ -823,7 +900,10 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       val dir = tmpDir(s"crash-$point")
       val crashing = new CrawlJob(spark, pagesDF, settings, dir)
       crashing.afterWrite = (w, step) => if (w >= 2 && step == point) throw new Crash(point)
+      val pinned = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+      val before = pinned.map(spark.conf.get)
       intercept[Crash](crashing.run(Fixtures.seeds(V)))
+      assert(pinned.map(spark.conf.get) == before, s"$point: session settings not restored")
       val (resumed, summary) = runEngine(settings, dir)
       assert(scheduleTuples(resumed) == scheduleTuples(whole), s"$point: schedule diverged")
       assert(scheduleTuples(resumed) == simTuples(fullSim), s"$point: schedule ≠ simulator")

@@ -33,6 +33,8 @@ object CrawlDrive {
     job.scheduleTable.orderBy("wave", "rank").show(15, truncate = false)
     println("--- metrics:")
     job.metricsTable.orderBy("wave").show(50, truncate = false)
+    println("--- phase telemetry:")
+    job.telemetryTable.orderBy("wave", "phase").show(200, truncate = false)
     println("--- dead letters: " + job.deadTable.count())
     println("--- results sample:")
     job.resultsTable.select(col("url_canon"), col("n_outlinks"), substring(col("text"), 0, 60).as("text60"))

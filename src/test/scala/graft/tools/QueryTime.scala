@@ -1,34 +1,37 @@
 package graft.tools
 
 import graft.{FrontierBench, SparkEntry}
+import graft.plans.PhaseStats
 
-/** Time a single SparkEntry query: `QueryTime <name> [sfDir] [reps]`. */
+/** Times SparkEntry queries the way `graft.Bench` does (one session at
+ *  local[$SPARK_GRAFT_CPUS], a `count()` action, cache cleared between
+ *  reps) and prints, per rep, the Spark work the query ran as the engine's
+ *  phase listener counts it, with the query's name as the phase:
+ *  `QueryTime <name>[,<name>…] [sfDir] [reps]`. */
 object QueryTime {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val names = args(0).split(',').toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = FrontierBench.session(32)
+    val spark = FrontierBench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    val fn = SparkEntry.queries(name)
-    val nJobs = new java.util.concurrent.atomic.AtomicInteger
-    val jobNanos = new java.util.concurrent.atomic.AtomicLong
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        starts.put(j.jobId, System.nanoTime())
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        nJobs.incrementAndGet()
-        Option(starts.remove(j.jobId)).foreach(t0 => jobNanos.addAndGet(System.nanoTime() - t0))
+    val stats = new PhaseStats(spark.sparkContext)
+    spark.sparkContext.addSparkListener(stats)
+    names.foreach { name =>
+      val walls = (1 to reps).map { r =>
+        stats.enter(name)
+        val t0 = System.nanoTime()
+        val n = SparkEntry.queries(name)(spark, sfDir).count()
+        val wall = (System.nanoTime() - t0) / 1e9
+        stats.take(0, Seq(name)).filter(_.phase == name).foreach { p =>
+          println(f"QUERY $name rep=$r $wall%7.2f s rows=$n jobs=${p.jobs} stages=${p.stages} " +
+            f"tasks=${p.tasks} jobSecs=${p.job_s}%.2f shuffleMB=${p.shuffle_write_bytes / 1e6}%.2f " +
+            f"spillMB=${p.spill_bytes / 1e6}%.2f")
+        }
+        spark.catalog.clearCache()
+        wall
       }
-    })
-    (1 to reps).foreach { r =>
-      nJobs.set(0); jobNanos.set(0)
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let listener drain
-      println(f"QUERY $name rep=$r $wall%7.2f s rows=$n jobs=${nJobs.get} jobSecs=${jobNanos.get / 1e9}%.2f")
+      println(f"QUERY $name min=${walls.min}%.3f s")
     }
     spark.stop()
   }
