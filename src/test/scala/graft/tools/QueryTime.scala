@@ -23,7 +23,7 @@ object QueryTime {
         val t0 = System.nanoTime()
         val n = SparkEntry.queries(name)(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
-        stats.take(0, Seq(name)).filter(_.phase == name).foreach { p =>
+        stats.take(0, Seq(name)).foreach { p =>
           println(f"QUERY $name rep=$r $wall%7.2f s rows=$n jobs=${p.jobs} stages=${p.stages} " +
             f"tasks=${p.tasks} jobSecs=${p.job_s}%.2f shuffleMB=${p.shuffle_write_bytes / 1e6}%.2f " +
             f"spillMB=${p.spill_bytes / 1e6}%.2f")
