@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.MinHashExprs
 
 /**
  * Document deduplication for training-data pipelines, at four rigor/cost
@@ -11,10 +13,11 @@ import org.apache.spark.sql.functions._
  *
  *  - exact: md5(text) hash-groupBy, keep min id.
  *  - n-gram Jaccard: exact similarity of shared-shingle pairs.
- *  - MinHash+LSH: shingle → H minhashes (Kirsch–Mitzenmacher over
- *    xxhash64) → bands → bucket-join candidates → exact-Jaccard verify.
- *    At 100 TB the bucket join is the only shuffle that matters: its keys
- *    are (band, bucket-hash) — uniform by construction, no skew.
+ *  - MinHash+LSH: one native per-document sketch (shingle-hash set, H
+ *    seeded xxhash64 minhashes, band keys; [[graft.functions.MinHashKernel]])
+ *    → bucket-join candidates → exact-Jaccard verify over the sketch's
+ *    sets. At 100 TB the bucket join is the only shuffle that matters: its
+ *    keys are (band, bucket-hash) — uniform by construction, no skew.
  *  - SimHash: 64-bit signature, Hamming-≤k neighbors via the block trick
  *    (k+1 blocks; any pair within distance k shares ≥1 exact block).
  */
@@ -59,10 +62,11 @@ object TextDedup {
    *  that are duplicate-invariant: MinHash signatures (`min` over a slot
    *  is unchanged by repeats) and set-building aggregates that dedupe
    *  in-aggregate (`collect_set`). Skipping the distinct removes a full
-   *  exchange+aggregate over the corpus-wide shingle stream — the widest
-   *  stream in the near-dup pipeline. Consumers whose COUNTS must be
-   *  per-doc-distinct (document frequency caps, set sizes via
-   *  `collect_list`) need [[shingleHashes]]. */
+   *  exchange+aggregate over the corpus-wide shingle stream. Consumers
+   *  whose COUNTS must be per-doc-distinct (document frequency caps, set
+   *  sizes via `collect_list`) need [[shingleHashes]]. The per-document
+   *  sketch of [[minhashLshDuplicates]] hashes the same shingles without
+   *  building this stream. */
   def shingleHashesRaw(df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame = {
     val split0 = split(trim(col(textCol)), "\\s+")
     // k = 1: drop the empty word of empty or whitespace-only text, a
@@ -119,11 +123,18 @@ object TextDedup {
    *  The one provable gap: a pair sharing ZERO rare shingles never forms
    *  (all-boilerplate near-dups); the planted hot-shingle spec pins that
    *  the cap changes nothing on the fixture. `maxDf <= 0` keeps the
-   *  uncapped exact join (small corpora / oracles). */
+   *  uncapped exact join (small corpora / oracles).
+   *
+   *  Both paths count shingles per document (set sizes, the capped
+   *  path's `sz`/`rn` bounds), so the stream is made per-doc distinct
+   *  on entry: a repeat-carrying stream ([[shingleHashesRaw]]) gives the
+   *  same output as [[shingleHashes]]. Over an already-distinct stream
+   *  the optimizer drops the second distinct (same grouping keys). */
   def jaccardPairs(sh: DataFrame, minJaccardMilli: Int, maxDf: Int = 0): DataFrame = {
+    val uniq = sh.select(col("id"), col("shingle")).distinct()
     if (maxDf <= 0) {
-      val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-      val inter = sh.as("x").join(sh.as("y"), col("x.shingle") === col("y.shingle"))
+      val sizes = uniq.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+      val inter = uniq.as("x").join(uniq.as("y"), col("x.shingle") === col("y.shingle"))
         .filter(col("x.id") < col("y.id"))
         .groupBy(col("x.id").as("a"), col("y.id").as("b"))
         .agg(count(lit(1)).as("inter"))
@@ -131,14 +142,14 @@ object TextDedup {
         .filter(col("jaccard_milli") >= minJaccardMilli)
         .select(col("a"), col("b"), col("jaccard_milli"))
     } else {
-      val hot = hotShingles(sh, maxDf)
+      val hot = hotShingles(uniq, maxDf)
       // ONE flag join replaces the old anti-join + two separate by-id
       // aggregates (r6): a left join against the hot set marks each
       // shingle row, so the total AND rare per-doc counts come out of a
-      // single exchange of sh by id (one less full pass + exchange), and
+      // single exchange of uniq by id (one less full pass + exchange), and
       // the candidate bound attaches ONE counts table per side instead
       // of two (sizes + rareSizes) — two fewer joins on the pair stream.
-      val flagged = sh.join(hot.withColumn("__hot", lit(true)),
+      val flagged = uniq.join(hot.withColumn("__hot", lit(true)),
         Seq("shingle"), "left")
       val counts = flagged.groupBy(col("id")).agg(count(lit(1)).as("sz"),
         count(when(col("__hot").isNull, lit(1))).as("rn"))
@@ -157,7 +168,7 @@ object TextDedup {
         .select(col("a"), col("b"))
       // cand rows are unique: interRare is a groupBy(a, b) output joined
       // 1:1 against per-id aggregates
-      jaccardForPairs(cand, sh, minJaccardMilli, assumeDistinct = true)
+      jaccardForPairs(cand, uniq, minJaccardMilli, assumeDistinct = true)
     }
   }
 
@@ -172,24 +183,19 @@ object TextDedup {
    *  step of LSH — never materializes the all-pairs shingle join).
    *
    *  Shape (r6): ONE aggregate builds each candidate doc's shingle set as
-   *  a sorted array — bounded by the doc's own shingle count, and only
+   *  an array — bounded by the doc's own shingle count, and only
    *  candidate docs (output-proportional, tiny next to the corpus) ever
-   *  build one — then each pair joins its two sets and verifies with a
-   *  per-row `array_intersect` (codegen HOF, O(|A|+|B|) per pair, the
-   *  floor for exact verification). The old five-pass form (sizes
-   *  aggregate + a-side expansion + b-side semi probe over a persisted
-   *  shingle slice) paid 5 shuffle stages plus a blocking cache build per
-   *  call; this is 3 narrow stages, no persist, no checkpoint — and the
-   *  two set-join branches share one identical aggregate subtree that
-   *  ReuseExchange evaluates once. Work and shuffle bytes stay
-   *  Σ over pairs (|A|+|B|): a corpus-wide hot shingle still costs
-   *  nothing here.
+   *  build one — then [[verifySets]] joins each pair's two sets and
+   *  verifies with a per-row `array_intersect`. The two set-join
+   *  branches share one identical aggregate subtree that ReuseExchange
+   *  evaluates once. Work and shuffle bytes stay Σ over pairs (|A|+|B|):
+   *  a corpus-wide hot shingle still costs nothing here.
    *
    *  `cand` is deduplicated internally unless the caller vouches with
-   *  `assumeDistinct` (both in-repo callers produce provably-unique
-   *  pairs — a post-join .distinct() / a groupBy output — so the extra
-   *  exchange re-deduplicating them bought nothing): duplicate (a, b)
-   *  rows must not double the output. */
+   *  `assumeDistinct` (the capped [[jaccardPairs]] path produces
+   *  provably-unique pairs — a groupBy output — so the extra exchange
+   *  re-deduplicating them bought nothing): duplicate (a, b) rows must
+   *  not double the output. */
   def jaccardForPairs(cand0: DataFrame, sh: DataFrame, minJaccardMilli: Int,
       assumeDistinct: Boolean = false): DataFrame = {
     val cand =
@@ -200,38 +206,44 @@ object TextDedup {
     // exchange just to deduplicate rows the semi join ignores anyway
     val candIds = cand.select(explode(array(col("a"), col("b"))).as("id"))
     // collect_set dedups in-aggregate, so `sh` may be the RAW (repeat-
-    // carrying) shingle stream ([[shingleHashesRaw]]); the set size is
-    // the distinct count either way and array_intersect counts |A∩B|
-    // exactly
+    // carrying) shingle stream ([[shingleHashesRaw]])
     val sets = sh.join(candIds, Seq("id"), "left_semi")
       .groupBy(col("id")).agg(collect_set(col("shingle")).as("set"))
-    val inter = cand
+    verifySets(cand, sets, minJaccardMilli)
+  }
+
+  /** Exact Jaccard of each distinct candidate pair (a, b) from per-doc
+   *  DISTINCT shingle sets (id, set): the pair joins its two sets and
+   *  `array_intersect` (codegen, O(|A|+|B|) per pair, the floor for exact
+   *  verification) counts |A∩B|. Keeps pairs at or above the threshold:
+   *  (a, b, jaccard_milli). */
+  private def verifySets(cand: DataFrame, sets: DataFrame, minJaccardMilli: Int): DataFrame =
+    cand
       .join(sets.select(col("id").as("a"), col("set").as("__sa")), Seq("a"))
       .join(sets.select(col("id").as("b"), col("set").as("__sb")), Seq("b"))
       .select(col("a"), col("b"),
         size(col("__sa")).cast("long").as("sza"),
         size(col("__sb")).cast("long").as("szb"),
         size(array_intersect(col("__sa"), col("__sb"))).cast("long").as("inter"))
-    inter
       .withColumn("jaccard_milli",
         floor(lit(1000) * col("inter") / (col("sza") + col("szb") - col("inter"))))
       .filter(col("jaccard_milli") >= minJaccardMilli)
       .select(col("a"), col("b"), col("jaccard_milli"))
-  }
 
   /** MinHash signatures: H hash slots per id, slot i = min over shingles
-   *  of xxhash64(xxhash64(shingle), i) — the shingle STRING is hashed
-   *  exactly once per row (projected below the aggregate) and each slot
-   *  re-mixes the resulting fixed-width long with its slot index, a
+   *  of xxhash64(xxhash64(shingle), i) — [[graft.functions.MinHashKernel.slot]],
+   *  the one definition the per-document sketch shares. The shingle is
+   *  hashed exactly once per row (projected below the aggregate) and each
+   *  slot re-mixes the resulting fixed-width long with its slot index, a
    *  seeded-hash family (plain Kirsch–Mitzenmacher `h1 + i·h2` would
-   *  overflow-throw under Spark 4's default ANSI mode). The old form
-   *  hashed the full shingle string H times per row — H× the string
-   *  traffic for the same family quality; candidate sets differ
-   *  per-family but the exact-Jaccard verify pins the OUTPUT pair set
-   *  either way (P(band miss at s=0.8) ≈ 6e-15 for any uniform family). */
+   *  overflow-throw under Spark 4's default ANSI mode). Candidate sets
+   *  differ per family but the exact-Jaccard verify pins the OUTPUT pair
+   *  set either way (P(band miss at s=0.8) ≈ 6e-15 for any uniform
+   *  family). [[minhashLshDuplicates]] computes the same slots per
+   *  document, without this aggregate. */
   def minhashSignatures(sh: DataFrame, numHashes: Int): DataFrame = {
     val hashes = (0 until numHashes).map(i =>
-      min(xxhash64(col("__h1"), lit(i))).as(s"m$i"))
+      min(MinHashExprs.slot(col("__h1"), i)).as(s"m$i"))
     sh.select(col("id"), xxhash64(col("shingle")).as("__h1"))
       .groupBy(col("id"))
       .agg(hashes.head, hashes.tail: _*)
@@ -244,30 +256,51 @@ object TextDedup {
    *  (including the rep itself). Chained in front of similarity passes so
    *  a cluster of k identical documents costs ONE signature instead of
    *  k² shared-bucket candidates. */
-  def collapseExact(df: DataFrame, textCol: String, idCol: String): (DataFrame, DataFrame) = {
-    // null-text rows are excluded (as before: a null __h never joins).
-    // The rep aggregate CARRIES the text (r6): the text rides as a GROUP
-    // KEY next to its md5 — byte-identical within a group, so the groups
-    // are exactly the md5 groups — which keeps the one aggregate
-    // HashAggregate with a primitive min(id) buffer (a first(text)/
-    // min_by form carries a string BUFFER and silently degrades the
-    // whole aggregate to SortAggregate — two full corpus sorts, the trap
-    // PlanAuditSpec guards). The old reps-side semi-join back onto the
-    // corpus — one exchange of (id, text) by id plus one of repIds by
-    // rep — disappears; the aggregate exchange carries the text once,
-    // map-side partials collapsing k local copies of a duplicated text
-    // before anything is shuffled (at scale that is LESS text on the
-    // wire than the old id-keyed join, which shuffled every corpus
-    // row's text). The member join stays on slim (hash, id) rows.
-    val withH = df.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), col(textCol), md5(col(textCol)).as("__h"))
-    val agg = withH.groupBy(col("__h"), col(textCol))
-      .agg(min(col("id")).as("rep"))
-    val members = withH.select(col("__h"), col("id"))
-      .join(agg.select(col("__h"), col("rep")), Seq("__h"))
-      .select(col("rep"), col("id"))
-    val reps = agg.select(col("rep").as("id"), col(textCol))
+  def collapseExact(df: DataFrame, textCol: String, idCol: String): (DataFrame, DataFrame) =
+    collapseBy(df, textCol, idCol, md5)
+
+  /** [[collapseExact]] with the text digest as a parameter (a test seam
+   *  for digest collisions). Groups are (digest, text): the text rides
+   *  as a partition key next to its digest, so a collision never merges
+   *  two texts. ONE exchange, partitioned by the group key, derives both
+   *  outputs: a window over it gives every row its group's min id (`rep`)
+   *  and its rank by id within the group; the first row of each group is the
+   *  rep row (carrying the text) and every row is a (rep, id) member.
+   *  There is no member join back onto the groups, so no second shuffle
+   *  of the text or of the digest, and no member can pick up another
+   *  text's rep. Null-text rows are excluded. */
+  private[operators] def collapseBy(df: DataFrame, textCol: String, idCol: String,
+      digest: Column => Column): (DataFrame, DataFrame) = {
+    // ordered by id, the running min is the group's min from the first row on
+    val w = Window.partitionBy(col("__h"), col(textCol)).orderBy(col("id"))
+    val grouped = df.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), col(textCol), digest(col(textCol)).as("__h"))
+      .select(col("id"), col(textCol), min(col("id")).over(w).as("rep"),
+        row_number().over(w).as("__rn"))
+    val reps = grouped.filter(col("__rn") === 1).select(col("rep").as("id"), col(textCol))
+    val members = grouped.select(col("rep"), col("id"))
     (reps, members)
+  }
+
+  /** The MinHash-LSH sketch of every row: (id, sk) with
+   *  sk = struct<set, bands> ([[graft.functions.MinHashKernel.sketch]]).
+   *  Unmaterialized; [[minhashLshDuplicates]] checkpoints it once. */
+  private[operators] def lshSketch(df: DataFrame, textCol: String, idCol: String,
+      k: Int, numHashes: Int, bands: Int): DataFrame =
+    df.select(col(idCol).as("id"),
+      MinHashExprs.sketch(col(textCol), k, numHashes, bands).as("sk"))
+
+  /** Verified pairs of an [[lshSketch]] frame: rows sharing a (band,
+   *  bucket) key are candidates, and each candidate pair is verified
+   *  with exact Jaccard over the sketches' shingle sets. */
+  private[operators] def lshPairs(sk: DataFrame, minJaccardMilli: Int): DataFrame = {
+    val banded = sk.select(col("id"), posexplode(col("sk.bands")).as(Seq("band", "bucket")))
+    val candidates = banded.as("x").join(banded.as("y"),
+        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
+          col("x.id") < col("y.id"))
+      .select(col("x.id").as("a"), col("y.id").as("b"))
+      .distinct()
+    verifySets(candidates, sk.select(col("id"), col("sk.set").as("set")), minJaccardMilli)
   }
 
   /**
@@ -278,70 +311,48 @@ object TextDedup {
    * P(miss) ≈ 6e-15 for s = 0.8, so the verified output provably equals
    * the exact-Jaccard pair set (which is what the DuckDB oracle computes).
    *
+   * Everything up to the bucket join is per document: one native
+   * expression ([[graft.functions.MinHashKernel.sketch]]) turns each text
+   * into its sorted, distinct shingle-hash set and its band keys — the
+   * same values [[shingleHashesRaw]], [[minhashSignatures]] and the
+   * `xxhash64(slice(sig, …), b)` band hash give, with no shingle explode,
+   * no shuffle by id, no 64-way aggregate and no `collect_set`. The
+   * sketch frame is checkpointed once (one eager job) and read by both
+   * the band self-join (`posexplode` of the band keys) and the verify
+   * (`array_intersect` over the two sets). Per-row memory is O(words of
+   * one document): its word offsets, one long per shingle in the set and
+   * the fixed-size signature — a mega-document costs its own size, never
+   * a corpus-wide buffer.
+   *
    * Identical-text clusters are collapsed FIRST ([[collapseExact]]): k
    * byte-identical copies share every band bucket, so uncollapsed they
-   * alone make C(k,2) candidate pairs (the r2 caveat). Shingling,
-   * banding and the verify all run on one representative per distinct
-   * text; verified rep pairs then re-expand to member pairs — within a
-   * group every cross pair has the rep pair's exact Jaccard, and a group
-   * with ≥ 2 members (whose text shingles at all) contributes its
-   * C(g,2) identical pairs at Jaccard 1000‰. The expansion is
-   * output-sized: the true duplicate-pair set, nothing intermediate.
+   * alone make C(k,2) candidate pairs (the r2 caveat). Sketching, banding
+   * and the verify all run on one representative per distinct text;
+   * verified rep pairs then re-expand to member pairs — within a group
+   * every cross pair has the rep pair's exact Jaccard, and a group with
+   * ≥ 2 members (whose text shingles at all) contributes its C(g,2)
+   * identical pairs at Jaccard 1000‰. The expansion is output-sized: the
+   * true duplicate-pair set, nothing intermediate.
    */
   def minhashLshDuplicates(
       df: DataFrame, textCol: String, idCol: String,
       k: Int = 3, numHashes: Int = 64, bands: Int = 32,
       minJaccardMilli: Int = 800, assumeUnique: Boolean = false): DataFrame = {
     require(numHashes % bands == 0)
-    val rowsPerBand = numHashes / bands
     // assumeUnique (r6): a caller that ALREADY collapsed byte-identical
     // texts (e.g. a pipeline whose previous stage was exact dedup, like
     // corpus_clean) vouches that texts are distinct — the exact-collapse
-    // pre-pass would be an identity map costing two exchanges, and the
-    // member re-expansion + within-group branches are empty by
-    // construction (every group is a singleton), so the verified rep
-    // pairs ARE the output. Null-text rows behave identically in both
-    // paths: they produce no shingles, so they enter no pair either way.
-    if (assumeUnique) {
-      val reps = df.select(col(idCol).as("id"), col(textCol))
-      val sh = shingleHashesRaw(reps, textCol, "id", k)
-      val sig = minhashSignatures(sh, numHashes)
-      val banded = sig.select(col("id"), posexplode(
-          expr(s"transform(sequence(0, ${bands - 1}), b -> xxhash64(slice(sig, b * $rowsPerBand + 1, $rowsPerBand), b))"))
-          .as(Seq("band", "bucket")))
-      val candidates = banded.as("x").join(banded.as("y"),
-          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-            col("x.id") < col("y.id"))
-        .select(col("x.id").as("a"), col("y.id").as("b"))
-        .distinct()
-      return jaccardForPairs(candidates, sh, minJaccardMilli, assumeDistinct = true)
-    }
+    // pre-pass would be an identity map, and the member re-expansion +
+    // within-group branches are empty by construction (every group is a
+    // singleton), so the verified rep pairs ARE the output. Null-text
+    // rows behave identically in both paths: they produce no shingles,
+    // so they enter no pair either way.
+    if (assumeUnique)
+      return lshPairs(lshSketch(df, textCol, idCol, k, numHashes, bands).localCheckpoint(true),
+        minJaccardMilli)
     val (reps, members) = collapseExact(df, textCol, idCol)
-    // hashed shingles (r6): every consumer below — signatures, band
-    // buckets, the exact-Jaccard verify's intersection counts — uses
-    // shingles through equality only, so the 8-byte hash replaces the
-    // phrase string end to end (identical output up to 2^-64 collisions;
-    // the oracle checks the verified pair set either way). The stream is
-    // RAW (no per-doc distinct): signatures take a duplicate-invariant
-    // min and the verify collects a set — the distinct pass was a full
-    // extra exchange over the pipeline's widest stream for nothing.
-    val sh = shingleHashesRaw(reps, textCol, "id", k)
-    val sig = minhashSignatures(sh, numHashes)
-    // band bucket = hash of the band's signature slice, hashed as a LONG
-    // ARRAY (xxhash64 folds array elements natively) — the old concat_ws
-    // form built a comma-joined string per (id, band) just to hash it
-    val banded = sig.select(col("id"), posexplode(
-        expr(s"transform(sequence(0, ${bands - 1}), b -> xxhash64(slice(sig, b * $rowsPerBand + 1, $rowsPerBand), b))"))
-        .as(Seq("band", "bucket")))
-    val candidates = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b"))
-      .distinct()
-    // verify candidates with exact jaccard, restricted to the candidates
-    // (already distinct: the bucket join ends in .distinct() above)
-    val repPairs = jaccardForPairs(candidates, sh, minJaccardMilli,
-      assumeDistinct = true)
+    val sk = lshSketch(reps, textCol, "id", k, numHashes, bands).localCheckpoint(true)
+    val repPairs = lshPairs(sk, minJaccardMilli)
     // cross-group expansion: every member pair inherits its rep pair's
     // exact Jaccard (identical texts); re-order ids (groups interleave)
     val cross = repPairs
@@ -352,7 +363,7 @@ object TextDedup {
     // within-group pairs: identical texts, Jaccard exactly 1000‰ —
     // restricted to groups whose text produces shingles at all (a doc
     // with < k words never enters the exact pair universe either)
-    val shingledReps = sh.select(col("id").as("rep")).distinct()
+    val shingledReps = sk.filter(size(col("sk.set")) > 0).select(col("id").as("rep"))
     val m = members.join(shingledReps, Seq("rep"), "left_semi")
     val within = m.as("x").join(m.as("y"),
         col("x.rep") === col("y.rep") && col("x.id") < col("y.id"))

@@ -356,7 +356,7 @@ class CrawlJob(
     ckpt.writeBucketed(withSeq, 0, "frontier")
     ckpt.writeBucketed(withSeq.select(col("url_hash"), col("url_canon")), 0, "seen")
     releaseWave(Seq(withSeq))
-    val telemetry = PhaseStats.manifestEntries(stats.take(0, Seq("seed")))
+    val telemetry = PhaseStats.manifestEntries(stats.take(0, Seq("seed"))) ++ stats.takeCodegen()
     afterWrite(0, "manifest")
     ckpt.commit(0, telemetry ++
       Map("applied" -> "0", "finished" -> "0", "scheduledTotal" -> "0", "deadTotal" -> "0"))
@@ -398,9 +398,11 @@ class CrawlJob(
    *  went: a [[PhaseStats]] listener, attached for the run, charges every
    *  Spark job to its wave phase — `seed` (wave 0), then `schedule`,
    *  `fetch`, `discover` and `commit` — and the manifest carries
-   *  `m.phase.<phase>.<stat>` for each (see [[telemetryTable]]). Work
-   *  between two commits that commits nothing (the run's start-up reads,
-   *  an idle wave) counts toward the next committed wave. */
+   *  `m.phase.<phase>.<stat>` for each (see [[telemetryTable]]), plus the
+   *  JVM's Janino compiles and compile time in the wave,
+   *  `m.codegen.compiles` and `m.codegen.ms` ([[PhaseStats.takeCodegen]]).
+   *  Work between two commits that commits nothing (the run's start-up
+   *  reads, an idle wave) counts toward the next committed wave. */
   def run(seeds: Seq[String]): CrawlSummary = {
     val sc = spark.sparkContext
     val stats = new PhaseStats(sc)
@@ -958,7 +960,8 @@ class CrawlJob(
           .zip(Seq(candidateCounts, admittedCounts, scheduledCounts))
           .map { case (stage, counts) => s"lineage.$stage" -> CrawlJob.encodeLineage(counts) }
         val views = if (fetchedViews.isEmpty) Nil else Seq("fetched" -> fetchedViews.mkString(","))
-        val telemetry = PhaseStats.manifestEntries(stats.take(w, PhaseStats.WavePhases))
+        val telemetry =
+          PhaseStats.manifestEntries(stats.take(w, PhaseStats.WavePhases)) ++ stats.takeCodegen()
         afterWrite(w, "manifest")
         ckpt.commit(w, (lineage ++ views).toMap ++ telemetry ++ Map(
           "applied" -> applied.toString, "finished" -> finished.toString,

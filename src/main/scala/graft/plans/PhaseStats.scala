@@ -2,7 +2,9 @@ package graft.plans
 
 import scala.collection.mutable
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Spark work charged by phase. Every job goes to the phase named by the
  *  [[PhaseStats.Key]] local property of the thread that submitted it
@@ -14,9 +16,17 @@ import org.apache.spark.scheduler._
  *
  *  The wave thread switches phases with [[enter]], which also charges it
  *  wall time; a thread that does a phase's work elsewhere (a pool thread
- *  does not inherit the tag) calls [[tag]] in its own body. */
-private[graft] final class PhaseStats(sc: SparkContext) extends SparkListener {
+ *  does not inherit the tag) calls [[tag]] in its own body.
+ *
+ *  A [[PhaseStats.window]] listener ignores tags instead: it charges every
+ *  job of the session to the phase last entered, for measurements that
+ *  run one thing at a time (a query that runs a crawl inside retags its
+ *  threads with the crawl's own run id). */
+private[graft] final class PhaseStats private (sc: SparkContext, chargeAll: Boolean)
+    extends SparkListener {
   import PhaseStats._
+
+  def this(sc: SparkContext) = this(sc, chargeAll = false)
 
   private val prefix = java.util.UUID.randomUUID().toString + ":"
 
@@ -47,6 +57,22 @@ private[graft] final class PhaseStats(sc: SparkContext) extends SparkListener {
     since = now
   }
 
+  private var compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  private var compileNs = CodeGenerator.compileTime
+
+  /** Janino compiles and compile milliseconds of this JVM (every thread,
+   *  driver and local executors) since the previous call or construction,
+   *  as the manifest entries `m.codegen.compiles` and `m.codegen.ms`.
+   *  Read from Spark's codegen counters: no Spark job. */
+  def takeCodegen(): Map[String, String] = synchronized {
+    val (c, ns) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+    val out = Map("m.codegen.compiles" -> (c - compiles).toString,
+      "m.codegen.ms" -> ((ns - compileNs) / 1e6).toString)
+    compiles = c
+    compileNs = ns
+    out
+  }
+
   /** Drains the listener bus (bounded by [[DrainTimeoutMs]]; on a timeout
    *  late events count toward the next call), then returns the counters
    *  since the previous call, for `phases` and any other phase that ran
@@ -65,16 +91,17 @@ private[graft] final class PhaseStats(sc: SparkContext) extends SparkListener {
     }
   }
 
-  override def onJobStart(e: SparkListenerJobStart): Unit =
-    Option(e.properties).flatMap(p => Option(p.getProperty(Key)))
-      .filter(_.startsWith(prefix)).map(_.substring(prefix.length))
-      .foreach { phase =>
-        synchronized {
-          accOf(phase).jobs += 1
-          runningJobs(e.jobId) = (phase, e.time, e.stageIds)
-          e.stageIds.foreach(stagePhase(_) = phase)
-        }
-      }
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    val phase =
+      if (chargeAll) Option(current)
+      else Option(e.properties).flatMap(p => Option(p.getProperty(Key)))
+        .filter(_.startsWith(prefix)).map(_.substring(prefix.length))
+    phase.foreach { p =>
+      accOf(p).jobs += 1
+      runningJobs(e.jobId) = (p, e.time, e.stageIds)
+      e.stageIds.foreach(stagePhase(_) = p)
+    }
+  }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
     runningJobs.remove(e.jobId).foreach { case (phase, t0, stageIds) =>
@@ -100,6 +127,10 @@ private[graft] final class PhaseStats(sc: SparkContext) extends SparkListener {
 }
 
 private[graft] object PhaseStats {
+  /** A listener that charges every job of the session, tagged or not, to
+   *  the phase last entered (see the class comment). */
+  def window(sc: SparkContext): PhaseStats = new PhaseStats(sc, chargeAll = true)
+
   /** Local property naming the run and phase of the jobs a thread submits. */
   val Key = "graft.phase"
 

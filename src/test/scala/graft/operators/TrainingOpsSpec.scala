@@ -628,6 +628,81 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.agg(max("b")).collect()(0).getLong(0) == 999L)
   }
 
+  test("collapseExact: a digest collision never merges texts or duplicates members") {
+    val sp = spark
+    import sp.implicits._
+    val df = Seq[(Long, String)]((4L, "gamma delta"), (1L, "alpha beta"), (2L, "gamma delta"),
+      (3L, "alpha beta"), (5L, "solo text"), (6L, null)).toDF("doc_id", "text")
+    def out(rm: (DataFrame, DataFrame)) = (
+      rm._1.collect().map(r => r.getLong(0) -> r.getString(1)).toSet,
+      rm._2.collect().map(r => r.getLong(1) -> r.getLong(0)).toSeq.sorted)
+    val want = (Set(1L -> "alpha beta", 2L -> "gamma delta", 5L -> "solo text"),
+      Seq(1L -> 1L, 2L -> 2L, 3L -> 1L, 4L -> 2L, 5L -> 5L))
+    // every text gets the same digest: groups must still split by text
+    assert(out(TextDedup.collapseBy(df, "text", "doc_id", _ => lit("collide"))) == want)
+    assert(out(TextDedup.collapseExact(df, "text", "doc_id")) == want)
+  }
+
+  test("jaccardPairs: a repeat-carrying shingle stream gives the distinct stream's output") {
+    // a repeated phrase makes every doc carry repeated (and hot) shingles
+    val rep = docs.select(col("doc_id"),
+      concat(lit("la la la la la la "), col("text"), lit(" la la la la")).as("text"))
+    val raw = TextDedup.shingleHashesRaw(rep, "text", "doc_id", 3)
+    val distinct = TextDedup.shingleHashes(rep, "text", "doc_id", 3)
+    assert(raw.count() > distinct.count(), "the raw stream must carry repeats")
+    for (maxDf <- Seq(0, 32)) {
+      val want = TextDedup.jaccardPairs(distinct, 500, maxDf).collect().map(_.toSeq).toSet
+      assert(want.nonEmpty, "corpus should contain planted near-dups")
+      assert(TextDedup.jaccardPairs(raw, 500, maxDf).collect().map(_.toSeq).toSet == want,
+        s"maxDf=$maxDf")
+    }
+  }
+
+  test("minhash LSH: a 200,000-word document and its one-word edit give the exact pair set") {
+    val sp = spark
+    import sp.implicits._
+    val rnd = new scala.util.Random(11)
+    val words = Array.fill(200000)("w" + rnd.nextInt(50000))
+    val edited = words.clone()
+    edited(100000) = "edited"
+    val texts = Seq(1L -> words.mkString(" "), 2L -> edited.mkString(" "),
+      3L -> words.take(60).mkString(" "), 4L -> "short unrelated text body")
+    def shingleSet(t: String) = t.split(" ").sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
+    val sets = texts.toMap.map { case (id, t) => id -> shingleSet(t) }
+    val exact = (for ((a, sa) <- sets; (b, sb) <- sets if a < b) yield {
+      val inter = sa.count(sb.contains).toLong
+      (a, b, 1000L * inter / (sa.size + sb.size - inter))
+    }).filter(_._3 >= 800).toSet
+    assert(exact.map(p => (p._1, p._2)) == Set((1L, 2L)))
+    val out = TextDedup.minhashLshDuplicates(texts.toDF("doc_id", "text"), "text", "doc_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(out == exact)
+  }
+
+  test("minhash LSH plan: no Generate over shingles, no collect_set, no aggregate keyed by id") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectSet
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate}
+    // the sketch unmaterialized, so its own plan is inspected too
+    val lazyPlan = TextDedup.lshPairs(TextDedup.lshSketch(docs, "text", "doc_id", 3, 64, 32), 800)
+    Seq(lazyPlan, TextDedup.minhashLshDuplicates(docs, "text", "doc_id"),
+        TextDedup.minhashLshDuplicates(docs, "text", "doc_id", assumeUnique = true))
+      .map(_.queryExecution.optimizedPlan).foreach { p =>
+        // (the optimizer may alias the struct field as `_extract_bands`)
+        val gens = p.collect { case g: Generate => g.generator }
+        assert(gens.nonEmpty && gens.forall(g =>
+            g.prettyName == "posexplode" && g.children.forall(_.sql.contains("bands"))),
+          s"only the band keys may be exploded:\n$p")
+        val aggs = p.collect { case a: Aggregate => a }
+        assert(!aggs.exists(_.aggregateExpressions.exists(_.exists(_.isInstanceOf[CollectSet]))),
+          s"no collect_set:\n$p")
+        assert(!aggs.exists(_.groupingExpressions.exists {
+            case r: AttributeReference => r.name == "id"
+            case _ => false
+          }), s"no aggregate keyed by id:\n$p")
+      }
+  }
+
   // ---- Similarity ----
 
   test("brute-force topK is deterministic and self-excluding") {

@@ -172,6 +172,8 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("wave telemetry: m.phase.* keys for every committed wave, jobs equal a listener's, all tagged; detached after run") {
+    // (the same manifests carry m.codegen.*, read from counters: the job
+    // equality below also pins that they add no Spark job)
     // every job start, with the phase tag of the thread that submitted it
     val seenJobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
     val probe = new org.apache.spark.scheduler.SparkListener {
@@ -227,6 +229,11 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         val phases = if (w == 0) Seq("seed") else PhaseStats.WavePhases
         for (p <- phases; s <- PhaseStats.Stats)
           assert(m.get(s"m.phase.$p.$s").exists(_.toDouble >= 0), s"wave $w: m.phase.$p.$s")
+        // the JVM's codegen work in the wave: a compile takes time, no compile none
+        val compiles = m("m.codegen.compiles").toLong
+        val compileMs = m("m.codegen.ms").toDouble
+        assert(compiles >= 0 && compileMs >= 0 && (compiles == 0) == (compileMs == 0),
+          s"wave $w: $compiles compiles in $compileMs ms")
         val rows = PhaseStats.fromManifest(w, m)
         assert(rows.map(_.phase).sorted == phases.sorted, s"wave $w phases")
         assert(rows.forall(r => r.jobs > 0 && r.tasks > 0 && r.wall_s > 0), s"wave $w: $rows")

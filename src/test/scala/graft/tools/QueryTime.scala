@@ -5,8 +5,10 @@ import graft.plans.PhaseStats
 
 /** Times SparkEntry queries the way `graft.Bench` does (one session at
  *  local[$SPARK_GRAFT_CPUS], a `count()` action, cache cleared between
- *  reps) and prints, per rep, the Spark work the query ran as the engine's
- *  phase listener counts it, with the query's name as the phase:
+ *  reps) and prints, per rep, the Spark work the query ran: every job the
+ *  session submitted during the rep, counted by a window phase listener
+ *  ([[PhaseStats.window]]) with the query's name as the phase, so the
+ *  jobs of a crawl the query runs inside count too:
  *  `QueryTime <name>[,<name>…] [sfDir] [reps]`. */
 object QueryTime {
   def main(args: Array[String]): Unit = {
@@ -15,7 +17,7 @@ object QueryTime {
     val reps = if (args.length > 2) args(2).toInt else 3
     val spark = FrontierBench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    val stats = new PhaseStats(spark.sparkContext)
+    val stats = PhaseStats.window(spark.sparkContext)
     spark.sparkContext.addSparkListener(stats)
     names.foreach { name =>
       val walls = (1 to reps).map { r =>
