@@ -280,7 +280,9 @@ object SparkEntry {
           md5(col("body")).as("body_md5"))
     }),
 
-    // robots.txt gate: broadcast host rules + prefix check
+    // robots.txt gate (Robots.filterAllowed, the one RFC 9309 gate; the
+    // three robots_filter* queries differ only in their fixtures):
+    // Disallow-only prefixes
     "robots_filter" -> ((s, d) => {
       val rules = Robots.rulesFromTxt(s, Seq(
         "host0.example.com" -> "User-agent: *\nDisallow: /o/1",
@@ -289,31 +291,30 @@ object SparkEntry {
         .select(col("url_canon"), col("host"), col("seq"))
     }),
 
-    // RFC 9309 longest-match admission (the modern REP reading the
-    // legacy any-prefix gate cannot express): host0 = Allow carves the
-    // /o/1 subtree out of a Disallow /o/; host3 = exact Allow/Disallow
-    // tie (Allow wins) over a Disallow-everything floor; host7 = allow
-    // floor with one disallowed subtree; other hosts rule-free
+    // longest match with Allow lines: host0 = Allow carves the /o/1
+    // subtree out of a Disallow /o/; host3 = exact Allow/Disallow tie
+    // (Allow wins) over a Disallow-everything floor; host7 = allow floor
+    // with one disallowed subtree; other hosts rule-free
     "robots_filter_rfc" -> ((s, d) => {
-      val rules = Robots.rfcRulesFromTxt(s, Seq(
+      val rules = Robots.rulesFromTxt(s, Seq(
         "host0.example.com" -> "User-agent: *\nDisallow: /o/\nAllow: /o/1",
         "host3.example.com" -> "User-agent: *\nDisallow: /o/3\nAllow: /o/3\nDisallow: /",
         "host7.example.com" -> "User-agent: *\nAllow: /\nDisallow: /o/7"))
-      Robots.filterAllowedRfc(enriched(s, d), rules)
+      Robots.filterAllowed(enriched(s, d), rules)
         .select(col("url_canon"), col("host"), col("seq"))
     }),
 
-    // RFC 9309 WILDCARD rules (* any-sequence, $ end anchor): host2
+    // wildcard rules (* any-sequence, $ end anchor): host2
     // blocks paths ending in 7, host5 is Disallow-/o/ with an
     // ends-in-5 wildcard carve-out (longest pattern wins), host9
     // blocks any path containing '1' — all verdicts on the PATH, so
     // the '9' in the hostname never triggers host9's rule
     "robots_filter_wildcard" -> ((s, d) => {
-      val rules = Robots.wildcardRuleTable(Robots.rfcRulesFromTxt(s, Seq(
+      val rules = Robots.rulesFromTxt(s, Seq(
         "host2.example.com" -> "User-agent: *\nDisallow: /o/*7$",
         "host5.example.com" -> "User-agent: *\nDisallow: /o/\nAllow: /o/*5$",
-        "host9.example.com" -> "User-agent: *\nDisallow: /*1*")))
-      Robots.filterAllowedRfcWildcard(enriched(s, d), rules)
+        "host9.example.com" -> "User-agent: *\nDisallow: /*1*"))
+      Robots.filterAllowed(enriched(s, d), rules)
         .select(col("url_canon"), col("host"), col("seq"))
     }),
 

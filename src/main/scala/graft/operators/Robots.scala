@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
  * robots.txt politeness rules (north-rule component; the reference has no
  * robots support — engine addition, offline model).
  *
- * Rules live in a small table (host, prefix): path prefixes disallowed for
- * `User-agent: *`. Candidate filtering is a broadcast join on host + an
- * `exists` prefix check — the rules side is tiny (one row per disallow
- * line) so the frontier never shuffles for robots.
+ * Rules live in a small table (host, prefix, allow): one row per
+ * `User-agent: *` Allow or Disallow line. One gate, [[filterAllowed]],
+ * admits candidates under RFC 9309 — `*`/`$` patterns, longest match
+ * decides — via a join on host that AQE makes a broadcast when the
+ * rules side is small, so the frontier never shuffles for robots.
  */
 object Robots {
 
@@ -30,9 +31,8 @@ object Robots {
    *  group by consecutive User-agent lines, collect Disallow / Allow /
    *  Crawl-delay of groups containing `*`; empty Disallow means
    *  allow-all; comments (#) stripped; non-numeric or non-positive
-   *  crawl-delays ignored. `disallows` alone drives the legacy
-   *  prefix-disallow gate ([[filterAllowed]]); `allows` joins in only
-   *  under the RFC 9309 longest-match gate ([[filterAllowedRfc]]). */
+   *  crawl-delays ignored. `disallows` and `allows` feed the rule
+   *  table of [[rulesFromTxt]]. */
   def parsePolicy(content: String): Policy = {
     if (content == null) return Policy(Nil, None, Nil)
     var groupAgents = Set.empty[String]
@@ -76,15 +76,16 @@ object Robots {
     Policy(out.result(), delay, maps.result(), allows.result())
   }
 
-  /** `*`-group disallowed path prefixes (see [[parsePolicy]]). */
-  def parseRobotsTxt(content: String): Seq[String] =
-    parsePolicy(content).disallows
-
-  /** Build the rules table from (host, robots.txt body) rows. */
+  /** The rules table of [[filterAllowed]] from (host, robots.txt body)
+   *  rows: one row per `*`-group Allow or Disallow line,
+   *  (host, prefix, allow). A prefix is the line's raw pattern, `*` and
+   *  `$` included. */
   def rulesFromTxt(spark: SparkSession, robots: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
-    robots.flatMap { case (host, txt) => parseRobotsTxt(txt).map(p => (host, p)) }
-      .toDF("host", "prefix")
+    robots.flatMap { case (host, txt) =>
+      val p = parsePolicy(txt)
+      p.disallows.map(r => (host, r, false)) ++ p.allows.map(r => (host, r, true))
+    }.toDF("host", "prefix", "allow")
   }
 
   /** Per-host crawl-delay table (host, delay_secs) from (host, body) rows;
@@ -94,17 +95,6 @@ object Robots {
     robots.flatMap { case (host, txt) =>
       parsePolicy(txt).crawlDelaySecs.map(d => (host, d)) }
       .toDF("host", "delay_secs")
-  }
-
-  /** RFC 9309 rule table from (host, robots.txt body) rows: one row per
-   *  `*`-group Allow OR Disallow line — (host, prefix, allow). Feeds
-   *  [[filterAllowedRfc]]. */
-  def rfcRulesFromTxt(spark: SparkSession, robots: Seq[(String, String)]): DataFrame = {
-    import spark.implicits._
-    robots.flatMap { case (host, txt) =>
-      val p = parsePolicy(txt)
-      p.disallows.map(r => (host, r, false)) ++ p.allows.map(r => (host, r, true))
-    }.toDF("host", "prefix", "allow")
   }
 
   /** File-global sitemap URL table (host, sitemap_url) from (host, body). */
@@ -201,8 +191,22 @@ object Robots {
   def pathOf(urlCanon: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     regexp_replace(regexp_replace(urlCanon, "^[a-z][a-z0-9+.-]*://[^/]*", ""), "^$", "/")
 
-  /** Drop candidates whose path is disallowed for their host.
-   *  `candidates` needs (host, url_canon); `rules` is (host, prefix).
+  /** RFC 9309 admission (§2.2.2): drop candidates whose path their
+   *  host's rules disallow. `candidates` needs (host, url_canon); `rules`
+   *  is the (host, prefix, allow) table of [[rulesFromTxt]], where a
+   *  prefix may hold `*` (any octet sequence) and a trailing `$` (end
+   *  anchor). The longest matching pattern decides — specificity is the
+   *  pattern's octet length, Google's published tie order — Allow wins a
+   *  length tie, and no match allows: `Disallow: /` + `Allow: /public/`
+   *  crawls exactly the public tree.
+   *
+   *  Each pattern is split on `*` once, on the rules side (parts,
+   *  anchored, plen), so the per-URL matcher [[wildcardMatches]] is a
+   *  pure fold with no per-row pattern parsing. Rules are pre-grouped to
+   *  one array row per host and the verdict is a per-row codegen'd fold
+   *  over them (rules × parts per URL, both small constants): no shuffle
+   *  on the frontier, no per-rule row explosion. The spec fuzzes the
+   *  matcher against a regex translation.
    *
    *  No broadcast HINT on the rules side: per-host rules for a 10^7+
    *  host web crawl reach GBs, and a hint is obeyed even at OOM size
@@ -212,43 +216,23 @@ object Robots {
    *  keyed on host — an exchange the politeness top-k downstream pays
    *  anyway — when it is not. */
   def filterAllowed(candidates: DataFrame, rules: DataFrame): DataFrame = {
-    val agg = rules.groupBy(col("host")).agg(collect_list(col("prefix")).as("__prefixes"))
-    candidates.join(agg, Seq("host"), "left")
-      .withColumn("__path", pathOf(col("url_canon")))
-      .filter(col("__prefixes").isNull ||
-        !exists(col("__prefixes"), p => col("__path").startsWith(p)))
-      .drop("__prefixes", "__path")
-  }
-
-  /** RFC 9309 §2.2.2 admission: the MOST SPECIFIC (longest-prefix)
-   *  matching rule decides, Allow wins a length tie, no match allows.
-   *  This is the modern reading Google/Bing apply — `Disallow: /` +
-   *  `Allow: /public/` crawls exactly the public tree, which the
-   *  legacy any-prefix gate ([[filterAllowed]]) cannot express.
-   *
-   *  Prefix model like the rest of the engine: `*`/`$` wildcard rules
-   *  are out of scope (they need per-row dynamic regex — documented
-   *  residual, rare in the wild relative to prefix rules).
-   *
-   *  Scale: same shape as [[filterAllowed]] — rules pre-grouped to one
-   *  array row per host (AQE-sized join, no hint), verdict is a per-row
-   *  codegen'd HOF fold over the matching rules: no shuffle on the
-   *  frontier, no per-rule row explosion. */
-  def filterAllowedRfc(candidates: DataFrame, rules: DataFrame): DataFrame = {
-    val agg = rules.groupBy(col("host"))
-      .agg(collect_list(struct(col("prefix"), col("allow"))).as("__rules"))
+    val agg = rules.groupBy(col("host")).agg(collect_list(struct(
+        split(regexp_replace(col("prefix"), "\\$$", ""), "\\*", -1).as("parts"),
+        col("prefix").endsWith("$").as("anchored"),
+        length(col("prefix")).as("plen"),
+        col("allow")))
+      .as("__rules"))
     val verdict = {
       val matching = filter(col("__rules"),
-        r => col("__path").startsWith(r("prefix")))
-      // fold to the best rule under (longest prefix, allow wins ties);
+        r => wildcardMatches(col("__path"), r("parts"), r("anchored")))
+      // fold to the best rule under (longest pattern, allow wins ties);
       // the seed is the no-match default: length -1, allowed
       aggregate(matching,
         struct(lit(-1).as("len"), lit(true).as("allow")),
         (acc, r) => {
-          val rl = length(r("prefix"))
-          val better = rl > acc("len") ||
-            (rl === acc("len") && r("allow") && !acc("allow"))
-          when(better, struct(rl.as("len"), r("allow").as("allow")))
+          val better = r("plen") > acc("len") ||
+            (r("plen") === acc("len") && r("allow") && !acc("allow"))
+          when(better, struct(r("plen").as("len"), r("allow").as("allow")))
             .otherwise(acc)
         })("allow")
     }
@@ -257,19 +241,6 @@ object Robots {
       .filter(col("__rules").isNull || verdict)
       .drop("__rules", "__path")
   }
-
-  /** Pre-compiled wildcard rule table for [[filterAllowedRfcWildcard]]:
-   *  each RFC 9309 rule (which may contain `*` — any octet sequence —
-   *  and a trailing `$` end anchor) is split ONCE, engine-side, into
-   *  (host, parts = pattern split on `*`, anchored, plen = pattern
-   *  octet length, allow). Splitting at build time keeps the per-URL
-   *  matcher a pure fold — no per-row string parsing of the pattern. */
-  def wildcardRuleTable(rules: DataFrame): DataFrame =
-    rules.select(col("host"),
-      split(regexp_replace(col("prefix"), "\\$$", ""), "\\*", -1).as("parts"),
-      col("prefix").endsWith("$").as("anchored"),
-      length(col("prefix")).as("plen"),
-      col("allow"))
 
   /** One rule's match verdict against `path` — RFC 9309 wildcard
    *  semantics via greedy leftmost placement of the inter-`*` literal
@@ -299,41 +270,6 @@ object Robots {
         path.endsWith(last) &&
           (length(path) - length(last) + 1 >= folded("cur")))
         .otherwise(last === "" || lastLoc > 0))
-  }
-
-  /** RFC 9309 admission with full `*`/`$` wildcard rules — the
-   *  [[filterAllowedRfc]] longest-match/tie-to-allow verdict where a
-   *  rule's specificity is its pattern octet length (Google's
-   *  published tie order) and matching follows the RFC's wildcard
-   *  semantics. `rules` is the (host, parts, anchored, plen, allow)
-   *  table from [[wildcardRuleTable]].
-   *
-   *  Scale: same shape as the prefix gate — one array row per host,
-   *  AQE-sized join, and the verdict is a per-row codegen'd fold (rules
-   *  × parts per URL, both small constants); no shuffle on the frontier.
-   *  The spec property-fuzzes the matcher against a regex translation,
-   *  so the fold IS the RFC semantics, not an approximation. */
-  def filterAllowedRfcWildcard(candidates: DataFrame,
-      rules: DataFrame): DataFrame = {
-    val agg = rules.groupBy(col("host")).agg(collect_list(
-      struct(col("parts"), col("anchored"), col("plen"), col("allow")))
-      .as("__rules"))
-    val verdict = {
-      val matching = filter(col("__rules"),
-        r => wildcardMatches(col("__path"), r("parts"), r("anchored")))
-      aggregate(matching,
-        struct(lit(-1).as("len"), lit(true).as("allow")),
-        (acc, r) => {
-          val better = r("plen") > acc("len") ||
-            (r("plen") === acc("len") && r("allow") && !acc("allow"))
-          when(better, struct(r("plen").as("len"), r("allow").as("allow")))
-            .otherwise(acc)
-        })("allow")
-    }
-    candidates.join(agg, Seq("host"), "left")
-      .withColumn("__path", pathOf(col("url_canon")))
-      .filter(col("__rules").isNull || verdict)
-      .drop("__rules", "__path")
   }
 
   /** Parse sitemap INDEX bodies (`<sitemapindex>` — the nesting level

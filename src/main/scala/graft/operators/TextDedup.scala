@@ -212,11 +212,20 @@ object TextDedup {
     verifySets(cand, sets, minJaccardMilli)
   }
 
+  /** Identity on a long that the optimizer cannot see through (boxed, so
+   *  Spark adds no null guard that would repeat the argument): a
+   *  nondeterministic projection is a barrier to predicate pushdown (the
+   *  [[BloomStore]] probe's idiom), so a filter over a column computed
+   *  behind it reads the column. Without it the [[verifySets]] threshold
+   *  filter is pushed into the second set join's condition with the
+   *  intersection inlined, and `array_intersect` runs twice per pair. */
+  private val pushdownFence = udf((v: java.lang.Long) => v).asNondeterministic()
+
   /** Exact Jaccard of each distinct candidate pair (a, b) from per-doc
    *  DISTINCT shingle sets (id, set): the pair joins its two sets and
    *  `array_intersect` (codegen, O(|A|+|B|) per pair, the floor for exact
-   *  verification) counts |A∩B|. Keeps pairs at or above the threshold:
-   *  (a, b, jaccard_milli). */
+   *  verification) counts |A∩B|, once per pair. Keeps pairs at or above
+   *  the threshold: (a, b, jaccard_milli). */
   private def verifySets(cand: DataFrame, sets: DataFrame, minJaccardMilli: Int): DataFrame =
     cand
       .join(sets.select(col("id").as("a"), col("set").as("__sa")), Seq("a"))
@@ -224,7 +233,8 @@ object TextDedup {
       .select(col("a"), col("b"),
         size(col("__sa")).cast("long").as("sza"),
         size(col("__sb")).cast("long").as("szb"),
-        size(array_intersect(col("__sa"), col("__sb"))).cast("long").as("inter"))
+        pushdownFence(size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
+          .as("inter"))
       .withColumn("jaccard_milli",
         floor(lit(1000) * col("inter") / (col("sza") + col("szb") - col("inter"))))
       .filter(col("jaccard_milli") >= minJaccardMilli)

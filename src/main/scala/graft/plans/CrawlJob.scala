@@ -181,6 +181,11 @@ class CrawlJob(
     settings: CrawlSettings,
     workDir: String,
     priorityExpr: Column => Column = _ => lit(0),
+    // robots.txt rules (host STRING, prefix STRING, allow BOOLEAN — the
+    // table Robots.rulesFromTxt builds) gate every candidate at
+    // enrichment under RFC 9309: `*`/`$` patterns, longest match decides,
+    // Allow wins a tie, no match allows (Robots.filterAllowed). Disallowed
+    // urls never enter frontier or seen. None (default) admits every url.
     robotsRules: Option[DataFrame] = None,
     // O7 end-to-end: decayed per-host budgets (host STRING, host_budget
     // INT — the output of Politeness.adaptiveHostBudgets over a previous
@@ -257,13 +262,7 @@ class CrawlJob(
   // UrlCanon functions, zero-copy fast path, no Scala-UDF bridge
   private def canonCol(c: Column): Column = graft.functions.UrlExprs.canonicalizeUrl(c)
   private def hostCol(c: Column): Column = graft.functions.UrlExprs.urlHost(c)
-  private val extractTextUdf = {
-    val ctr = counters // local capture: the closure must not drag `this` in
-    udf((html: Array[Byte], u: String) => {
-      ctr.add("extract", "pages")
-      Extract.extractText(html, u)
-    })
-  }
+  private val extractTextUdf = udf((html: Array[Byte], u: String) => Extract.extractText(html, u))
   private val outlinksUdf = udf((html: Array[Byte], u: String) => Extract.extractOutlinks(html, u))
 
   /** seq base for wave w: keeps discovery FIFO monotone across waves while
@@ -592,15 +591,17 @@ class CrawlJob(
             when(okCol, graft.operators.Robots.metaRobotsFlags(col("html").cast("string")))
               .otherwise(struct(lit(false).as("noindex"), lit(false).as("nofollow")))
           else struct(lit(false).as("noindex"), lit(false).as("nofollow"))
+        // the rows the text extractor runs on: over the fetched columns
+        // (okCol) in the select, over `ok` in the wave Observation
+        def extracts(ok: Column): Column =
+          if (settings.extract && textParserIds.nonEmpty) ok && pidIn(textParserIds)
+          else lit(false)
         val processed = fetchedRaw.select(
             (frontierCols :+ col("parser_id") :+ col("lang") :+
               okCol.as("ok") :+ eclassCol.as("__eclass") :+
               mrFlags.getField("noindex").as("__noindex") :+
-              (if (settings.extract && textParserIds.nonEmpty)
-                 when(okCol && pidIn(textParserIds),
-                   extractTextUdf(col("html"), col("url_canon")))
-                   .otherwise(lit(null)).as("text")
-               else lit(null).cast("string").as("text")) :+
+              when(extracts(okCol), extractTextUdf(col("html"), col("url_canon")))
+                .otherwise(lit(null).cast("string")).as("text") :+
               when(okCol && pidIn(linkParserIds) && !mrFlags.getField("nofollow"),
                 outlinksUdf(col("html"), col("url_canon")))
                 .otherwise(array().cast("array<string>")).as("outs") :+
@@ -612,7 +613,8 @@ class CrawlJob(
                 .as("__ehtml")): _*)
           .observe(obs, count(lit(1)).as("n"),
             sum(when(col("ok"), 0L).otherwise(1L)).as("errors"),
-            sum(when(retriableCol, 1L).otherwise(0L)).as("retries"))
+            sum(when(retriableCol, 1L).otherwise(0L)).as("retries"),
+            sum(when(extracts(col("ok")), 1L).otherwise(0L)).as("extracted"))
           .transform(persistWave)
         // materialize: html traversed exactly once, building the cache.
         // The fetched-rows write — the one table behind both the O9 inc
@@ -690,6 +692,7 @@ class CrawlJob(
         counters.add("budget", "applied", nScheduled)
         counters.add("budget", "finishes", nSuccess)
         counters.add("budget", "errors", nErrors)
+        counters.add("extract", "pages", obs.get("extracted").asInstanceOf[Long])
 
         stats.enter("discover")
         // ---- outlinks (F1) → new candidates: P1/P2 rule filter, P6 resolve

@@ -22,7 +22,7 @@ class RobotsCountersSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  test("parseRobotsTxt: star group, comments, multi-agent headers, allow ignored") {
+  test("parsePolicy disallows: star group, comments, multi-agent headers, allows apart") {
     val txt =
       """# comment
         |User-agent: googlebot
@@ -37,9 +37,9 @@ class RobotsCountersSpec extends AnyFunSuite with BeforeAndAfterAll {
         |User-agent: bingbot
         |Disallow: /bing
         |""".stripMargin
-    assert(Robots.parseRobotsTxt(txt) == Seq("/private/", "/tmp"))
-    assert(Robots.parseRobotsTxt("User-agent: *\nDisallow:") == Seq.empty) // empty = allow all
-    assert(Robots.parseRobotsTxt(null) == Seq.empty)
+    assert(Robots.parsePolicy(txt).disallows == Seq("/private/", "/tmp"))
+    assert(Robots.parsePolicy("User-agent: *\nDisallow:").disallows == Seq.empty) // empty = allow all
+    assert(Robots.parsePolicy(null).disallows == Seq.empty)
   }
 
   test("parsePolicy: *-group crawl-delay (min across groups), sitemaps are file-global") {
@@ -176,7 +176,36 @@ class RobotsCountersSpec extends AnyFunSuite with BeforeAndAfterAll {
     // A1/A6 accumulator counters match driver-side metrics
     val c = job.counters.value
     assert(c(("budget", "finishes")) == summary.finished)
-    assert(c(("extract", "pages")) >= summary.finished) // ≥: speculative/retried tasks may recount
+    // counted once per extracted row by the wave Observation, so a
+    // retried or recomputed task cannot recount
+    assert(c(("extract", "pages")) == summary.finished)
+  }
+
+  test("crawl honours an Allow carve-out and a wildcard rule end to end") {
+    val v = 200L
+    val pages = Fixtures.pagesDF(spark, v)
+    // host0: everything disallowed but the /p/1 subtree; host1: paths
+    // ending in 3 disallowed (its seed /p/3 among them)
+    val rules = Robots.rulesFromTxt(spark, Seq(
+      "host0.example.com" -> "User-agent: *\nDisallow: /\nAllow: /p/1",
+      "host1.example.com" -> "User-agent: *\nDisallow: /p/*3$"))
+    val dir = java.nio.file.Files.createTempDirectory("crawl-robots-rfc").toString
+    val settings = CrawlSettings(size = 60, hostBudget = 3, waveCap = 60, retries = 0,
+      maxWaves = 20, urlPattern = Fixtures.UrlPattern, extract = true,
+      seenFilter = "none", numBuckets = 8)
+    val job = new CrawlJob(spark, pages, settings, dir, robotsRules = Some(rules))
+    job.run(Fixtures.seeds(v))
+    val sched = job.scheduleTable.select("host", "url_canon").persist()
+    val urls = sched.collect().map(r => (r.getString(0), r.getString(1)))
+    assert(Robots.filterAllowed(sched, rules).count() == urls.length,
+      "every scheduled url must pass the gate")
+    val host0 = urls.collect { case ("host0.example.com", u) => u }
+    assert(host0.nonEmpty && host0.forall(_.startsWith("http://host0.example.com/p/1")),
+      s"host0 crawls its Allow carve-out and nothing else: ${host0.toSeq}")
+    val host1 = urls.collect { case ("host1.example.com", u) => u }
+    assert(host1.nonEmpty && !host1.exists(_.matches("http://host1\\.example\\.com/p/.*3")),
+      s"host1 never schedules a path ending in 3: ${host1.toSeq}")
+    sched.unpersist()
   }
 
   test("counter aggregators map to sum/collect_list/collect_set/max_by") {
@@ -196,7 +225,7 @@ class RobotsCountersSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(over(("g1", "a")) == 2L) // last write by ord
   }
 
-  // ---- RFC 9309 longest-match gate + sitemap index ----
+  // ---- RFC 9309 gate + sitemap index ----
 
   test("parsePolicy collects *-group Allow lines; legacy disallows unchanged") {
     val p = Robots.parsePolicy(
@@ -206,7 +235,7 @@ class RobotsCountersSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.allows === Seq("/private/ok"))
   }
 
-  test("filterAllowedRfc: longest match decides, Allow wins ties, no match allows") {
+  test("filterAllowed: longest match decides, Allow wins ties, no match allows") {
     val s = spark
     import s.implicits._
     val cands = Seq(
@@ -221,27 +250,22 @@ class RobotsCountersSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("h1", "/private", false), ("h1", "/private/ok", true),
       ("h2", "/t", false), ("h2", "/t", true), ("h2", "/", false))
       .toDF("host", "prefix", "allow")
-    val kept = Robots.filterAllowedRfc(cands, rules)
+    val kept = Robots.filterAllowed(cands, rules)
       .select("url_canon").collect().map(_.getString(0)).toSet
     assert(kept === Set("http://h1/private/ok/x", "http://h1/pub",
       "http://h2/t/x", "http://h3/anything"))
   }
 
-  test("filterAllowedRfc expresses the Disallow-/ + Allow-subtree pattern the legacy gate cannot") {
+  test("filterAllowed: a Disallow-/ floor with an Allow subtree crawls exactly the subtree") {
     val s = spark
     import s.implicits._
     val cands = Seq(("h", "http://h/public/a"), ("h", "http://h/secret/b"))
       .toDF("host", "url_canon")
-    val rules = Seq(("h", "/", false), ("h", "/public/", true))
-      .toDF("host", "prefix", "allow")
-    val rfc = Robots.filterAllowedRfc(cands, rules)
+    val rules = Robots.rulesFromTxt(spark,
+      Seq("h" -> "User-agent: *\nDisallow: /\nAllow: /public/"))
+    val kept = Robots.filterAllowed(cands, rules)
       .select("url_canon").collect().map(_.getString(0)).toSet
-    assert(rfc === Set("http://h/public/a"))
-    // the legacy any-prefix gate drops BOTH (Disallow-/ matches all)
-    val legacy = Robots.filterAllowed(cands,
-      Seq(("h", "/")).toDF("host", "prefix"))
-      .select("url_canon").collect()
-    assert(legacy.isEmpty)
+    assert(kept === Set("http://h/public/a"))
   }
 
   test("parseSitemapIndexXml: <sitemap> entries, loc required, lastmod nullable") {
@@ -318,7 +342,7 @@ class RobotsCountersSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("filterAllowedRfcWildcard: longest pattern wins, wildcard carve-outs work") {
+  test("filterAllowed: longest pattern wins, wildcard carve-outs work") {
     val s = spark
     import s.implicits._
     val cands = Seq(
@@ -326,11 +350,11 @@ class RobotsCountersSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("h", "http://h/a/file.php?q=1"),
       ("h", "http://h/a/file.html"),
       ("h", "http://h/priv/x.php")).toDF("host", "url_canon")
-    val rules = Robots.wildcardRuleTable(Seq(
+    val rules = Seq(
       ("h", "/*.php", false),      // block php anywhere (len 6)
       ("h", "/a/*.php$", true),    // but allow exactly-.php under /a (len 9)
-      ("h", "/priv/", false)).toDF("host", "prefix", "allow"))
-    val kept = Robots.filterAllowedRfcWildcard(cands, rules)
+      ("h", "/priv/", false)).toDF("host", "prefix", "allow")
+    val kept = Robots.filterAllowed(cands, rules)
       .select("url_canon").collect().map(_.getString(0)).toSet
     // /a/file.php: allow rule (9) beats block (6); the ?q=1 variant is
     // not $-anchored-matchable -> blocked; html passes untouched; priv blocked

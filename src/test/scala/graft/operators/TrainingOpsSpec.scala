@@ -680,7 +680,7 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("minhash LSH plan: no Generate over shingles, no collect_set, no aggregate keyed by id") {
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, AttributeReference}
     import org.apache.spark.sql.catalyst.expressions.aggregate.CollectSet
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate}
     // the sketch unmaterialized, so its own plan is inspected too
@@ -700,6 +700,11 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
             case r: AttributeReference => r.name == "id"
             case _ => false
           }), s"no aggregate keyed by id:\n$p")
+        // the verify's threshold filter reads the pair's intersection
+        // size; it must not inline a second array_intersect
+        val intersects = p.collect { case n =>
+          n.expressions.map(_.collect { case x: ArrayIntersect => x }.size).sum }.sum
+        assert(intersects == 1, s"one array_intersect per verified pair:\n$p")
       }
   }
 
