@@ -37,22 +37,6 @@ object VecKernel {
     while (i < n) { acc += (a.getFloat(i) * b.getFloat(i)).toDouble; i += 1 }
     acc
   }
-
-  def normDouble(a: ArrayData): Double = {
-    val n = a.numElements()
-    var acc = 0.0
-    var i = 0
-    while (i < n) { val v = a.getDouble(i); acc += v * v; i += 1 }
-    math.sqrt(acc)
-  }
-
-  def normFloat(a: ArrayData): Double = {
-    val n = a.numElements()
-    var acc = 0.0
-    var i = 0
-    while (i < n) { val v = (a.getFloat(i) * a.getFloat(i)).toDouble; acc += v; i += 1 }
-    math.sqrt(acc)
-  }
 }
 
 case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {

@@ -97,14 +97,6 @@ object Robots {
       .toDF("host", "delay_secs")
   }
 
-  /** File-global sitemap URL table (host, sitemap_url) from (host, body). */
-  def sitemapsFromTxt(spark: SparkSession, robots: Seq[(String, String)]): DataFrame = {
-    import spark.implicits._
-    robots.flatMap { case (host, txt) =>
-      parsePolicy(txt).sitemaps.map(u => (host, u)) }
-      .toDF("host", "sitemap_url")
-  }
-
   /** Turn crawl-delays into per-wave politeness caps: a host granting one
    *  fetch every `delay_secs` gets `floor(windowSecs / delay)` fetches of
    *  a wave's politeness window, clamped to [1, maxK] (a delay longer

@@ -34,8 +34,6 @@ object Fixtures extends Serializable {
   def hostIdx(id: Long): Int =
     if (id % 10 < 3) 0 else (1 + (id / 10 % (NHosts - 1))).toInt
 
-  def hostName(id: Long): String = s"host${hostIdx(id)}.example.com"
-
   /** Raw URL as it would appear in the wild — deterministic canonicalizer
    *  exercises: uppercase scheme/host, default port, unsorted query, fragment. */
   def rawUrl(id: Long): String = {

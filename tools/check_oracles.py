@@ -19,6 +19,13 @@ for t in glob.glob(f'{sf}/*.parquet'):
 
 oracle = json.load(open(f'{out}/oracle_sql.json'))
 fails = 0
+# Verify logs a query that throws and writes no directory for it, so on a
+# full run an oracled query without one failed rather than passed
+if not only:
+    for name in sorted(oracle):
+        if not os.path.isdir(f'{out}/{name}'):
+            fails += 1
+            print(f"{name}: MISSING no output directory")
 for name in sorted(os.listdir(out)):
     if not os.path.isdir(f'{out}/{name}'):
         continue
