@@ -15,8 +15,9 @@ import graft.sources.Fixtures
  * One timed "wave" at scale: n candidate URLs (≈1/3 in-batch duplicates,
  * skewed hosts) → canonicalize → D1 dedup gate (in-batch first-seen +
  * exact anti-join against a 20% pre-seen set) → salted per-host politeness
- * top-k + priority quotas. The measured work is exactly the engine's
- * scheduling DAG; input generation is ~free (spark.range).
+ * top-k + priority quotas; input generation is ~free (spark.range). It is
+ * not CrawlJob's wave: its in-batch dedup takes the HashAggregate path of
+ * Dedup.firstSeenInBatch, every engine admission the struct SortAggregate.
  *
  * Each parallelism level runs in its own forked JVM (like spark-submit
  * would), because sequential SparkSessions in one JVM pollute each other's

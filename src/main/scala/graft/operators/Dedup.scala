@@ -49,7 +49,10 @@ object Dedup {
    *  the post-dedup delta, never the raw candidates, and never the
    *  cumulative seen side.) Falls back to the generic
    *  struct-valued form for multi-column `ord` or var-length payload
-   *  columns (e.g. the raw `url` before it is dropped).
+   *  columns (e.g. the raw `url` before it is dropped). FrontierBench.runWave
+   *  and the `dedup_anti` / `frontier_union_dedup` queries take the fast
+   *  path; every CrawlJob admission takes the struct one (seeds carry the
+   *  raw `url`, discovery orders by 3 columns, the inc re-seed by 4).
    *
    *  CALLER CONTRACT (both paths): `host`, when present, MUST be derived
    *  from `url_canon` (as every engine call site does, via

@@ -332,6 +332,35 @@ class CrawlJob(
     robotsRules.fold(e)(rules => graft.operators.Robots.filterAllowed(e, rules))
   }
 
+  /** The one way a URL enters the frontier (≙ mq.put, store.py:245-257):
+   *  first-seen in the batch by `ord` (D1), the seen gate `force` rows pass
+   *  (D5) unless `seen` is None (the seed wave: the table is still empty,
+   *  and joining it would tie the admitted frame to the table it is then
+   *  inserted into), then the dense FIFO `seq` from `base` over the same
+   *  `ord` (O3). Returns the frontier rows and the rank pass's
+   *  per-partition counts. */
+  private def admit(rows: DataFrame, ord: Seq[String], base: Long, seen: Option[DataFrame],
+      bloom: Option[graft.operators.BloomStore]): (DataFrame, Array[Long]) = {
+    val order = ord.map(col)
+    val firstSeen = seen.fold(Dedup.firstSeenInBatch(rows, order))(
+      Dedup.dedupWave(spark, rows, _, order, bloomStore = bloom))
+    val (ranked, counts) = withDenseSeq(firstSeen, order, base, "seq")
+    (ranked.select(frontierCols: _*), counts)
+  }
+
+  /** A new frontier row's bookkeeping: no errors yet, schedulable at once. */
+  private def newRows(priority: Column, depth: Column, force: Boolean, wave: Int)
+      (df: DataFrame): DataFrame = df
+    .withColumn("priority", priority)
+    .withColumn("depth", depth)
+    .withColumn("force", lit(force))
+    .withColumn("error_times", lit(0))
+    .withColumn("discovered_wave", lit(wave))
+    .withColumn("eligible_wave", lit(0))
+
+  private def urlPriority: Column =
+    Politeness.clampPriority(priorityExpr(col("url_canon")), settings.nPriorities)
+
   /** Wave 0: admit the seed list (S1; dedup-at-discovery D1/D6 — seeds are
    *  anti-joined like any wave, mq.exist at cola/job/task.py:114-118). */
   private def admitSeeds(seeds: Seq[String], stats: PhaseStats): Unit = {
@@ -340,21 +369,13 @@ class CrawlJob(
       .filter(ParserDispatch.accepts(col("url"), parserRules)) // P1/P2
       .transform(trapGate("url")) // structural trap rules (off by default)
     val entries = enrich(raw)
-      .withColumn("priority", Politeness.clampPriority(priorityExpr(col("url_canon")), settings.nPriorities))
-      .withColumn("depth", lit(0))
-      .withColumn("force", lit(false))
-      .withColumn("error_times", lit(0))
-      .withColumn("discovered_wave", lit(0))
       .withColumn("bundle", lit(null).cast("string"))
-      .withColumn("eligible_wave", lit(0))
-    val deduped = Dedup.firstSeenInBatch(entries, Seq(col("__idx")))
-    val withSeq = withDenseSeq(deduped, Seq(col("__idx")), waveBase(0), "seq")._1
-      .drop("__idx")
-      .select(frontierCols: _*)
+      .transform(newRows(urlPriority, lit(0), force = false, wave = 0))
+    val admitted = admit(entries, Seq("__idx"), waveBase(0), seen = None, bloom = None)._1
       .transform(persistWave)
-    ckpt.writeBucketed(withSeq, 0, "frontier")
-    ckpt.writeBucketed(withSeq.select(col("url_hash"), col("url_canon")), 0, "seen")
-    releaseWave(Seq(withSeq))
+    ckpt.writeBucketed(admitted, 0, "frontier")
+    ckpt.writeBucketed(admitted.select(col("url_hash"), col("url_canon")), 0, "seen")
+    releaseWave(Seq(admitted))
     val telemetry = PhaseStats.manifestEntries(stats.take(0, Seq("seed"))) ++ stats.takeCodegen()
     afterWrite(0, "manifest")
     ckpt.commit(0, telemetry ++
@@ -384,8 +405,9 @@ class CrawlJob(
    *  For the duration of the run, `spark.sql.shuffle.partitions` is
    *  pinned to the engine's storage bucket count (and restored after):
    *  every wave exchange then lands directly on the bucketed state
-   *  layout — the same alignment FrontierBench.childMain pins for the
-   *  measured wave — instead of shuffling wave-sized frames across a
+   *  layout (as FrontierBench.childMain pins it for the headline wave,
+   *  a separate assembly of the operators: see Dedup.firstSeenInBatch)
+   *  instead of shuffling wave-sized frames across a
    *  session-wide partition count sized for scan-heavy analytics. The
    *  bucket count is the engine's declared state parallelism
    *  (settings.numBuckets, cluster-sized in production), so this scales
@@ -704,14 +726,6 @@ class CrawlJob(
         val acceptedLinks = outlinks
           .filter(ParserDispatch.accepts(col("out_url"), parserRules))
           .transform(trapGate("out_url"))
-        // discovery decoration shared by plain outlinks and bundle members
-        def decorate(df: DataFrame): DataFrame = df
-          .withColumn("priority", Politeness.clampPriority(priorityExpr(col("url_canon")), settings.nPriorities))
-          .withColumn("depth", col("parent_depth") + 1)
-          .withColumn("force", lit(false))
-          .withColumn("error_times", lit(0))
-          .withColumn("discovered_wave", lit(w))
-          .withColumn("eligible_wave", lit(0))
 
         // ---- F2/F3 bundles: links matching the bundle pattern discover
         //      LABELS (deduped by label through the same seen set, as
@@ -719,42 +733,38 @@ class CrawlJob(
         //      mixed url/label domain); fresh labels expand to member urls
         //      (bundle.urls()) which join the candidate stream tagged with
         //      their bundle ----
-        var freshLabels: DataFrame = null
-        var nLabels = 0L
-        val candidates = (settings.bundles match {
-          case None =>
-            enrich(acceptedLinks.withColumnRenamed("out_url", "url"))
-              .filter(col("url_canon") =!= col("parent_canon"))
-              .transform(decorate)
-              .withColumn("bundle", lit(null).cast("string"))
-              .withColumn("member_idx", lit(0))
-          case Some(bs) =>
-            val labelCol = regexp_extract(col("out_url"), "(?i)" + bs.pattern, 1)
-            val plain = enrich(acceptedLinks.filter(labelCol === "").withColumnRenamed("out_url", "url"))
-              .filter(col("url_canon") =!= col("parent_canon"))
-              .transform(decorate)
-              .withColumn("bundle", lit(null).cast("string"))
-              .withColumn("member_idx", lit(0))
-            val labels = acceptedLinks
-              .withColumn("label", labelCol)
-              .filter(col("label") =!= "")
-              .withColumn("url_canon", concat(lit("bundle://"), col("label")))
-              .withColumn("url_hash", Dedup.urlHash(col("url_canon")))
-              .select("url_hash", "url_canon", "label", "parent_seq", "link_idx", "parent_depth")
-            freshLabels = Dedup.dedupWave(spark, labels, seen,
-                Seq(col("parent_seq"), col("link_idx")),
-                bloomStore = bloomStore)
-              .transform(persistWave)
-            val memberUdf = udf((label: String) => bs.memberUrls(label))
-            val members = enrich(freshLabels
-                .select(col("label").as("bundle"), col("parent_seq"), col("link_idx"),
-                  col("parent_depth"),
-                  posexplode(memberUdf(col("label"))).as(Seq("member_idx", "url")))
-                .withColumn("member_idx", col("member_idx") + 1)) // plain rows are 0
-              .transform(decorate)
-              .withColumn("parent_canon", lit(null).cast("string"))
-            plain.unionByName(members.select(plain.columns.map(col).toSeq: _*))
-        }).transform(persistWave)
+        val labelOf = settings.bundles.map(bs =>
+          bs -> regexp_extract(col("out_url"), "(?i)" + bs.pattern, 1))
+        val plain = enrich(labelOf.fold(acceptedLinks)(l => acceptedLinks.filter(l._2 === ""))
+            .withColumnRenamed("out_url", "url"))
+          .filter(col("url_canon") =!= col("parent_canon"))
+          .withColumn("bundle", lit(null).cast("string"))
+          .withColumn("member_idx", lit(0))
+        // bundle mode: the fresh labels (persisted) and their member rows
+        val bundled = labelOf.map { case (bs, labelCol) =>
+          val labels = acceptedLinks
+            .withColumn("label", labelCol)
+            .filter(col("label") =!= "")
+            .withColumn("url_canon", concat(lit("bundle://"), col("label")))
+            .withColumn("url_hash", Dedup.urlHash(col("url_canon")))
+            .select("url_hash", "url_canon", "label", "parent_seq", "link_idx", "parent_depth")
+          val fresh = Dedup.dedupWave(spark, labels, seen,
+              Seq(col("parent_seq"), col("link_idx")),
+              bloomStore = bloomStore)
+            .transform(persistWave)
+          val memberUdf = udf((label: String) => bs.memberUrls(label))
+          val members = enrich(fresh
+              .select(col("label").as("bundle"), col("parent_seq"), col("link_idx"),
+                col("parent_depth"),
+                posexplode(memberUdf(col("label"))).as(Seq("member_idx", "url")))
+              .withColumn("member_idx", col("member_idx") + 1)) // plain rows are 0
+            .withColumn("parent_canon", lit(null).cast("string"))
+          (fresh, members.select(plain.columns.map(col).toSeq: _*))
+        }
+        val freshLabels = bundled.map(_._1)
+        val candidates = bundled.fold(plain)(b => plain.unionByName(b._2))
+          .transform(newRows(urlPriority, col("parent_depth") + 1, force = false, w))
+          .transform(persistWave)
 
         // the per-partition count (nCandidates and the candidates
         // lineage) is ALSO the cache build, deliberately serialized
@@ -765,22 +775,16 @@ class CrawlJob(
         val candidateCounts = CrawlJob.partitionCounts(
           candidates.select(lit(1)).queryExecution.toRdd)
         val nCandidates = candidateCounts.sum
-        if (freshLabels != null) nLabels = freshLabels.count() // cached, cheap
+        val nLabels = freshLabels.fold(0L)(_.count()) // cached, cheap
 
         // ---- D1 dedup gate ----
-        val fresh = Dedup.dedupWave(spark, candidates, seen,
-            Seq(col("parent_seq"), col("link_idx"), col("member_idx")),
-            bloomStore = bloomStore)
         // nNew (and the admitted lineage) rides the dense-seq count pass;
         // the cache builds at the seen write (the first action over
         // newEntries)
-        val (freshSeq, admittedCounts) = withDenseSeq(fresh,
-          Seq(col("parent_seq").asc, col("link_idx").asc, col("member_idx").asc),
-          waveBase(w), "seq")
+        val (admitted, admittedCounts) = admit(candidates,
+          Seq("parent_seq", "link_idx", "member_idx"), waveBase(w), Some(seen), bloomStore)
         val nNew = admittedCounts.sum
-        val newEntries = freshSeq
-          .select(frontierCols: _*)
-          .transform(persistWave)
+        val newEntries = admitted.transform(persistWave)
 
         // ---- next frontier ----
         // keyed (url_hash, url_canon): the frontier side is a bucketed scan
@@ -860,11 +864,9 @@ class CrawlJob(
         // seen delta = new frontier urls ∪ fresh bundle labels (both gate
         // future discoveries; labels must also reach the blooms or the
         // "definitely new" shortcut would readmit a seen label)
-        val seenDelta =
-          if (nLabels > 0)
-            newEntries.select(col("url_hash"), col("url_canon"))
-              .unionByName(freshLabels.select(col("url_hash"), col("url_canon")))
-          else newEntries.select(col("url_hash"), col("url_canon"))
+        val newSeen = newEntries.select(col("url_hash"), col("url_canon"))
+        val seenDelta = freshLabels.filter(_ => nLabels > 0).fold(newSeen)(fl =>
+          newSeen.unionByName(fl.select(col("url_hash"), col("url_canon"))))
         // the seen write runs on the wave thread FIRST: it is the action
         // that builds the newEntries cache, which every tail write below
         // reads — racing the cache build would recompute the dedup subtree
@@ -976,7 +978,7 @@ class CrawlJob(
           "m.deduped" -> (nCandidates - nNew).toString,
           "m.frontier_size" -> frontierSize.toString, "m.secs" -> secs.toString))
 
-        releaseWave(Seq(scheduled, processed, candidates, newEntries) ++ Option(freshLabels))
+        releaseWave(Seq(scheduled, processed, candidates, newEntries) ++ freshLabels)
       }
       wave = w
     }
@@ -1033,19 +1035,10 @@ class CrawlJob(
     val entries = pool
       .withColumn("url_hash", Dedup.urlHash(col("url_canon")))
       .withColumn("host", hostCol(col("url_canon")))
-      .withColumn("priority", lit(settings.nPriorities - 1))
-      .withColumn("depth", lit(0))
-      .withColumn("force", lit(true))
-      .withColumn("error_times", lit(0))
-      .withColumn("discovered_wave", lit(w))
-      .withColumn("eligible_wave", lit(0))
-    val passed = Dedup.dedupWave(spark, entries, seen,
-      Seq(col("o_src"), col("o_wave"), col("o_priority"), col("o_seq")),
-      bloomStore = bloomStore)
-    val (seeded, n) = withDenseSeq(passed,
-      Seq(col("o_src").asc, col("o_wave").asc, col("o_priority").asc, col("o_seq").asc),
-      waveBase(w), "seq")
-    (seeded.select(frontierCols: _*), n.sum)
+      .transform(newRows(lit(settings.nPriorities - 1), lit(0), force = true, w))
+    val (seeded, counts) = admit(entries, Seq("o_src", "o_wave", "o_priority", "o_seq"),
+      waveBase(w), Some(seen), bloomStore)
+    (seeded, counts.sum)
   }
 
   private def summary(wave: Int, applied: Long, finished: Long,

@@ -3,7 +3,7 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.UrlCanon
+import graft.functions.{UrlCanon, UrlExprs}
 import graft.operators.{Blocklist, Dedup, Politeness}
 import graft.plans.{CrawlJob, CrawlSettings}
 import graft.sources.{Fixtures, Warc}
@@ -77,16 +77,16 @@ object FrontierQueries {
   private[queries] def oracle(body: String): String =
     s"WITH urls AS (${urlsCte("orders")}) $body"
 
-  // engine UDFs (the operators under test)
+  // the engine's operators under test: host is the native
+  // UrlExprs.urlHost; the fragment strip has no native form
   private val stripFragUdf = udf((u: String) => UrlCanon.stripFragment(u))
-  private val hostUdf = udf((u: String) => UrlCanon.host(u))
 
   /** url_canon/host enrichment restricted to the SQL-expressible core
     * (P5/P7/P8) so DuckDB can reproduce it. */
   private[queries] def enriched(spark: SparkSession, sfDir: String): DataFrame =
     urlsDF(spark, sfDir)
       .withColumn("url_canon", lower(stripFragUdf(col("url"))))
-      .withColumn("host", hostUdf(lower(col("url"))))
+      .withColumn("host", UrlExprs.urlHost(lower(col("url"))))
 
   /** [[enriched]] with the scan spread to the session's shuffle width
     * FIRST (r6): the source parquet is one row group, so every per-row
@@ -99,7 +99,7 @@ object FrontierQueries {
     urlsDF(spark, sfDir)
       .repartition(spark.sessionState.conf.numShufflePartitions)
       .withColumn("url_canon", lower(stripFragUdf(col("url"))))
-      .withColumn("host", hostUdf(lower(col("url"))))
+      .withColumn("host", UrlExprs.urlHost(lower(col("url"))))
 
   private[queries] val enrichedOracle =
     """SELECT url, priority, seq,
@@ -157,7 +157,7 @@ object FrontierQueries {
 
     // P5: host extraction
     Query("host_extract", (s, d) =>
-      urlsDF(s, d).select(hostUdf(lower(col("url"))).as("host"), col("seq")),
+      urlsDF(s, d).select(UrlExprs.urlHost(lower(col("url"))).as("host"), col("seq")),
       Some(oracle(
         "SELECT lower(regexp_extract(url, '^http://([^/#]+)', 1)) AS host, seq FROM urls"))),
 
@@ -219,7 +219,7 @@ object FrontierQueries {
     // this oracle pins end-to-end row equality against DuckDB)
     Query("dedup_anti_cuckoo", (s, d) => {
       val e = enriched(s, d)
-        .withColumn("url_hash", xxhash64(col("url_canon")))
+        .withColumn("url_hash", Dedup.urlHash(col("url_canon")))
       // seen keyed on the CANON id (seq % 5000 is the url identity in the
       // fixture derivation) — a seq-keyed split would cover every distinct
       // canon and leave a vacuous 0-row result

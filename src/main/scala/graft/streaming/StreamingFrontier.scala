@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import graft.operators.Dedup
 
 /** A discovered-URL event on the streaming frontier. */
 case class UrlEvent(url_canon: String, host: String, priority: Int, ts: Timestamp)
@@ -124,10 +125,8 @@ object StreamingFrontier {
       .option("checkpointLocation", streamCkptDir)
       .foreachBatch { (batch: Dataset[GatedUrl], batchId: Long) =>
         val withHash = batch.toDF()
-          .withColumn("url_hash", xxhash64(col("url_canon")))
-        val seen = ckpt.readBucketed("seen", Int.MaxValue)
-        val admitted = withHash.join(seen.select("url_hash", "url_canon"),
-          Seq("url_hash", "url_canon"), "left_anti")
+          .withColumn("url_hash", Dedup.urlHash(col("url_canon")))
+        val admitted = Dedup.antiJoinSeen(withHash, ckpt.readBucketed("seen", Int.MaxValue))
         // land the admitted set as the batch's durable output FIRST (the
         // continuous analog of the per-wave schedule table), then append
         // the re-read stable copy to the seen table: appending to a table

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** latestRevision (newest-capture-wins collapse), hashSplit
+/** latestRevision (newest-capture-wins collapse), firstSeenInBatch's
+  * two aggregate paths, hashSplit
   * (deterministic content-keyed train/val/test assignment), and
   * Blocklist (label-bounded domain-suffix admission). */
 class AdmissionSplitSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -65,6 +66,37 @@ class AdmissionSplitSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException] {
       Dedup.latestRevision(captures(), "url", Seq.empty)
     }
+  }
+
+  // ---- firstSeenInBatch: per-column vs struct min_by ----
+
+  test("firstSeenInBatch: the HashAggregate and SortAggregate paths keep the same rows") {
+    val s = spark
+    import s.implicits._
+    // 3,000 rows over 150 canons (about 20 copies each), seq unique,
+    // fixed-width payloads only
+    val rnd = new scala.util.Random(20261020L)
+    val seqs = rnd.shuffle((0L until 3000L).toVector)
+    val rows = seqs.map { seq =>
+      val page = rnd.nextInt(150)
+      (s"http://h${page % 7}.com/p/$page", seq, rnd.nextInt(3), rnd.nextInt(5), rnd.nextBoolean())
+    }
+      .toDF("url_canon", "seq", "priority", "depth", "force")
+      .withColumn("url_hash", Dedup.urlHash(col("url_canon")))
+      .repartition(4)
+    val perColumn = Dedup.firstSeenInBatch(rows, Seq(col("seq")))
+    // a constant second order column changes no order but forces the
+    // struct min_by the multi-column engine admissions take
+    val viaStruct = Dedup.firstSeenInBatch(rows, Seq(col("seq"), lit(0)))
+    val expected = perColumn.collect().toSet
+    assert(expected.size == rows.select("url_canon").distinct().count())
+    assert(viaStruct.collect().toSet == expected)
+    def nodes(df: DataFrame, name: String): Int =
+      s"\\b$name\\b".r.findAllIn(df.queryExecution.executedPlan.toString).size
+    assert(nodes(perColumn, "HashAggregate") > 0 && nodes(perColumn, "SortAggregate") == 0,
+      perColumn.queryExecution.executedPlan.toString)
+    assert(nodes(viaStruct, "SortAggregate") > 0 && nodes(viaStruct, "HashAggregate") == 0,
+      viaStruct.queryExecution.executedPlan.toString)
   }
 
   // ---- hashSplit ----

@@ -851,6 +851,21 @@ class CrawlJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(simTuples(simNoisy) == simTuples(simClean), "noise changed the sim schedule")
     assert(scheduleTuples(job) == simTuples(simNoisy), "engine diverged on noisy seeds")
     assert(scheduleTuples(job).nonEmpty)
+
+    // a fragment-suffixed copy placed before its seed shares the seed's
+    // url_canon: the seed wave's in-batch first-seen admits one row, and
+    // that row keeps the raw form that came first
+    val seed = Fixtures.seeds(V).find(!_.contains('#')).get
+    val dupCanon = Fixtures.seeds(V).flatMap(s => if (s == seed) Seq(s + "#dup", s) else Seq(s))
+    val dupJob = new CrawlJob(spark, pagesDF, settings, tmpDir("p4dup"))
+    dupJob.run(dupCanon)
+    val simDup = new ColaSimulator(settings, pagesMap); simDup.run(dupCanon)
+    assert(simTuples(simDup) == simTuples(simClean), "a duplicate canon changed the sim schedule")
+    assert(scheduleTuples(dupJob) == simTuples(simDup), "engine diverged on duplicate-canon seeds")
+    val fetchedUrls = dupJob.incTable
+      .filter(col("url_canon") === graft.functions.UrlCanon.canonicalize(seed))
+      .select("url").collect().map(_.getString(0)).toSeq
+    assert(fetchedUrls == Seq(seed + "#dup"), "the admitted seed lost its first raw form")
   }
 
   test("O9/D5 automated inc re-crawl matches the simulator (force rows pass the seen gate)") {
